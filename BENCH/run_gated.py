@@ -17,6 +17,7 @@ other tooling can avoid contending.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import subprocess
@@ -47,6 +48,24 @@ def probe_eff(n_procs: int = 32) -> float:
     return round((n_procs * 2 * single) / (wall * n_procs), 3)
 
 
+@contextlib.contextmanager
+def gate_lock(path: str = LOCK):
+    """Yield True while holding ``path``, False when another runner
+    holds it. The file is created with O_EXCL, so two runners can never
+    both hold it; it is removed on the way out."""
+    try:
+        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+    except FileExistsError:
+        yield False
+        return
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(str(os.getpid()))
+        yield True
+    finally:
+        os.remove(path)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--min-eff", type=float, default=0.75)
@@ -66,21 +85,19 @@ def main() -> None:
             print(f"[gate] eff {eff0} < {args.min_eff}; waiting", flush=True)
             time.sleep(args.poll)
             continue
-        attempt += 1
-        print(f"[gate] eff {eff0} — launching bench (attempt {attempt})", flush=True)
-        open(LOCK, "w").write(str(os.getpid()))
-        try:
+        with gate_lock() as held:
+            if not held:
+                print(f"[gate] {LOCK} is held by another runner; waiting", flush=True)
+                time.sleep(args.poll)
+                continue
+            attempt += 1
+            print(f"[gate] eff {eff0} — launching bench (attempt {attempt})", flush=True)
             t0 = time.time()
             r = subprocess.run(
                 [sys.executable, os.path.join(REPO, "bench.py")],
                 capture_output=True, text=True, timeout=1800,
             )
             wall = round(time.time() - t0, 1)
-        finally:
-            try:
-                os.remove(LOCK)
-            except OSError:
-                pass
         eff1 = probe_eff()
         try:
             parsed = json.loads(r.stdout.strip().splitlines()[-1])

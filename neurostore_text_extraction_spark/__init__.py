@@ -7,7 +7,7 @@ Layers
 ------
 1. Extraction front-end (SURVEY.md §2.9): pure-Python HTML boilerplate
    stripping + readability candidate scoring + minimal PDF layout parse,
-   executed as Arrow-batched UDFs (``mapInPandas``) — never per-row
+   executed as one Arrow-batched ``mapInArrow`` pass — never per-row
    driver Python.
 2. Pipeline framework semantics (SURVEY.md §2.1–§2.8): prioritized
    source resolution, per-doc vs corpus-scoped operators, schema-driven

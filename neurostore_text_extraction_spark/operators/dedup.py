@@ -184,8 +184,6 @@ def _materialize_recoverable(df: DataFrame) -> DataFrame:
     ``localCheckpoint`` (the pre-round-4 behavior: correct, GC-
     cleaned, just not executor-loss-recoverable); the recoverable
     path is a property of the production session factory."""
-    import os
-
     spark = df.sparkSession
     cleaned = (
         spark.conf.get(
@@ -218,9 +216,9 @@ def _materialize_recoverable(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True)
     sc = spark.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
-        sc.setCheckpointDir(
-            os.environ.get("SPARK_CHECKPOINT_DIR", "/dev/shm/spark-checkpoints")
-        )
+        from ..session import checkpoint_dir
+
+        sc.setCheckpointDir(checkpoint_dir())
     return df.checkpoint(eager=True)
 
 

@@ -1,5 +1,5 @@
 """The extraction stage: pages → extracted(text, spans) as a single
-Arrow-batched ``mapInPandas`` pass with url-hash salting, per-row fault
+Arrow-batched ``mapInArrow`` pass with url-hash salting, per-row fault
 isolation, and lineage instrumentation.
 
 Scale design (the part that matters at 100 TB / 10^12 docs):

@@ -2,16 +2,27 @@
 ``transform_dataset``, ``ns_extract/pipelines/base.py:121-234``,
 re-expressed as one DataFrame job per SURVEY.md §3.2's mapping):
 
-    pages → left_anti(manifest)            # O2 incremental / exact resume
+    pages → observe(input count)
+          → left_anti(manifest)            # O2 incremental / exact resume
           → repartition(xxhash64(url))     # skew salting (north rule)
-          → mapInPandas(extract)           # Arrow-batched front-end
-          → validate                       # pydantic-analogue validity flag
-          → results + lineage + manifest + runs snapshots (atomic)
+          → mapInArrow(extract)            # Arrow-batched front-end
+          → validate → observe(rows, errors)
+          → results snapshot               # the one job that extracts
+          → lineage, manifest, runs        # from the written snapshot
+
+Job plan of a run: the results write runs the anti-join, extraction and
+validation, and fills both Observations in the same job, so the run's
+counts cost no count job. Lineage is a ``groupBy`` over the written
+snapshot and the manifest a projection of it, both read back with the
+schema just written (no footer job); the runs row is built JVM-side. On
+a fresh store that is 6 Spark jobs: results (salt exchange + write),
+lineage (exchange + write), manifest, runs.
 
 Whole-run memoization (O1, ``base.py:157-162``): if nothing is left
-after the manifest anti-join the run returns early. Exact resume: a
-killed run commits nothing (snapshot rename is atomic), a partially
-complete multi-snapshot history replays only missing urls.
+after the manifest anti-join, the results write produces no rows,
+``Catalog.append`` commits nothing, and the run returns early. Exact
+resume: a killed run commits nothing (snapshot rename is atomic), a
+partially complete multi-snapshot history replays only missing urls.
 
 ``post_process="only"`` mode (``base.py:172-215``): replay a transform
 over the persisted results table without re-extraction — see
@@ -25,11 +36,11 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.extract import extract_pages, lineage_from_extracted
 from ..operators.incremental import config_hash, unprocessed
-from ..schemas import EXTRACTED_SCHEMA
+from ..schemas import EXTRACTED_SCHEMA, MANIFEST_SCHEMA, RUNS_SCHEMA
 from ..sources.catalog import Catalog
 
 EXTRACTOR_NAME = "main_content_extraction"
@@ -40,8 +51,8 @@ EXTRACTOR_VERSION = "1.1.0"  # versioned like the reference's _version (base.py:
 class RunResult:
     run_id: str
     config_hash: str
-    n_input: int
-    n_processed: int
+    n_input: int  # pages given to the run
+    n_processed: int  # pages left after the manifest anti-join, i.e. written
     n_errors: int
     skipped: bool  # whole-run cache hit
 
@@ -94,13 +105,13 @@ def run_extraction(
     run_id = uuid.uuid4().hex[:12]
     now = datetime.now(timezone.utc).isoformat()
 
-    manifest = cat.read(spark, "manifest") if resume else None
+    # Observations are filled by the first job over the observed frame:
+    # the results write below. Attach them after any earlier action on
+    # ``pages`` (the corpus digest above).
+    inputs, outputs = Observation(), Observation()
+    pages = pages.observe(inputs, F.count(F.lit(1)).alias("n"))
+    manifest = cat.read(spark, "manifest", schema=MANIFEST_SCHEMA) if resume else None
     todo = unprocessed(pages, manifest, cfg)
-
-    # O1 whole-run memoization: empty work list → skip (cheap limit-1
-    # probe, not a full count)
-    if todo.limit(1).isEmpty():
-        return RunResult(run_id, cfg, 0, 0, 0, True)
 
     # ``salt`` is an execution detail (same rows either way), so it is
     # deliberately NOT part of the config hash — toggling it must not
@@ -130,6 +141,7 @@ def run_extraction(
     # One pass: write results, derive lineage/manifest from the written
     # snapshot (re-read is a cheap columnar scan; avoids caching the
     # heavy text in memory and avoids recomputing the UDF 3x).
+    partition_by = None
     if partition_buckets:
         # repartition ON the bucket before the partitioned write: each
         # write task then owns whole buckets, so the snapshot holds
@@ -141,10 +153,21 @@ def run_extraction(
             "url_bucket",
             F.pmod(F.xxhash64(F.col("url")), F.lit(partition_buckets)).cast("int"),
         ).repartition(partition_buckets, F.col("url_bucket"))
-        snap = cat.append(validated, "results", partition_by=["url_bucket"])
-    else:
-        snap = cat.append(validated, "results")
-    written = spark.read.parquet(snap)
+        partition_by = ["url_bucket"]
+    # observe the frame the writer consumes: an observation below the
+    # bucket exchange is lost when AQE replaces an empty exchange's
+    # consumer with an empty relation
+    validated = validated.observe(
+        outputs, F.count(F.lit(1)).alias("n"), F.count("error").alias("errors")
+    )
+    snap = cat.append(
+        validated, "results", partition_by=partition_by, row_count=lambda: outputs.get["n"]
+    )
+    n_input = inputs.get["n"]
+    if snap is None:
+        # O1 whole-run memoization: the anti-join left nothing to do
+        return RunResult(run_id, cfg, n_input, 0, 0, True)
+    written = spark.read.schema(validated.schema).parquet(snap)
 
     cat.append(lineage_from_extracted(written, run_id), "lineage")
     cat.append(
@@ -157,28 +180,22 @@ def run_extraction(
         ),
         "manifest",
     )
+    run_row = (
+        run_id,
+        EXTRACTOR_NAME,
+        EXTRACTOR_VERSION,
+        cfg,
+        json.dumps(kwargs or {}, sort_keys=True),
+        EXTRACTED_SCHEMA.json(),
+        now,
+    )
+    # one JVM-side row: no Python worker, one output file
     cat.append(
-        spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    EXTRACTOR_NAME,
-                    EXTRACTOR_VERSION,
-                    cfg,
-                    json.dumps(kwargs or {}, sort_keys=True),
-                    EXTRACTED_SCHEMA.json(),
-                    now,
-                )
-            ],
-            "run_id string, extractor string, version string, config_hash string,"
-            " kwargs_json string, schema_json string, date string",
+        spark.range(1, numPartitions=1).select(
+            *(F.lit(v).alias(f.name) for f, v in zip(RUNS_SCHEMA.fields, run_row))
         ),
         "runs",
     )
-    counts = written.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("e"),
-    ).first()
     if auto_compact_after is not None:
         # results keyed by (url, config_hash): latest row per url per
         # config survives, so compaction never drops another config's
@@ -202,7 +219,8 @@ def run_extraction(
             spark, "lineage", ["run_id", "partition_id"], max_snapshots=auto_compact_after
         )
         cat.maybe_compact(spark, "runs", ["run_id"], max_snapshots=auto_compact_after)
-    return RunResult(run_id, cfg, counts["n"], counts["n"], int(counts["e"] or 0), False)
+    counts = outputs.get
+    return RunResult(run_id, cfg, n_input, counts["n"], counts["errors"], False)
 
 
 def read_results(

@@ -32,7 +32,7 @@ SPAN_TYPE = T.ArrayType(
     )
 )
 
-# Output of the extraction stage (mapInPandas) — one row per page.
+# Output of the extraction stage (mapInArrow) — one row per page.
 # partition_id / wall_us / n_html_bytes feed the per-partition lineage
 # aggregation (north rule: per-partition lineage rows). "required"
 # metadata drives the generic schema-conformance validity flag

@@ -15,6 +15,7 @@ Local mode here, but every knob is chosen for the 1000-executor /
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -22,6 +23,22 @@ from pyspark.sql import SparkSession
 # 180-636 KB; tail to multi-MB), so 256 rows/batch bounds per-batch
 # memory at ~hundreds of MB even in the tail.
 ARROW_BATCH_ROWS = 256
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical RAM: in local mode the driver heap also
+    holds the executors' memory, and the other half is left to the
+    Python workers and the page cache."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(phys // 2 // 2**20, 1024)}m"
+
+
+def checkpoint_dir() -> str:
+    """Reliable-checkpoint target: $SPARK_CHECKPOINT_DIR, else a
+    directory under the system temp dir."""
+    return os.environ.get(
+        "SPARK_CHECKPOINT_DIR", os.path.join(tempfile.gettempdir(), "spark-checkpoints")
+    )
 
 
 def get_spark(
@@ -117,13 +134,18 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "2m")
         .config("spark.hadoop.parquet.block.size", str(8 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-        # RAM-backed shuffle: this box has 128 GiB and a ~500 MB/s disk;
-        # payload-heavy exchanges (the url-hash salt shuffle moves every
-        # html byte) intermittently collapse 10x behind disk contention.
-        # On a real cluster this is local NVMe + network — tmpfs is the
-        # closest local-mode analogue.
-        .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"))
+        .config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", default_driver_memory())
+        )
+        # shuffle and spill files: the system temp dir unless
+        # $SPARK_LOCAL_DIRS says otherwise. Payload-heavy exchanges (the
+        # url-hash salt shuffle moves every html byte) are disk-bound on
+        # a slow disk; point it at tmpfs or local NVMe where there is
+        # room for them.
+        .config(
+            "spark.local.dir",
+            os.environ.get("SPARK_LOCAL_DIRS", os.path.join(tempfile.gettempdir(), "spark-local")),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # wide-aggregate plans (the K=128 MinHash signature groupBy has
@@ -141,12 +163,10 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # recoverable-materialization target (operators/dedup.
-    # _materialize_recoverable): local-mode default is tmpfs; on a real
-    # cluster point SPARK_CHECKPOINT_DIR at HDFS/S3 — reliable
+    # _materialize_recoverable): local-mode default is the temp dir; on
+    # a real cluster point SPARK_CHECKPOINT_DIR at HDFS/S3 — reliable
     # checkpoint storage is what makes corpus-sized stage results
     # survive executor loss
     if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        spark.sparkContext.setCheckpointDir(
-            os.environ.get("SPARK_CHECKPOINT_DIR", "/dev/shm/spark-checkpoints")
-        )
+        spark.sparkContext.setCheckpointDir(checkpoint_dir())
     return spark

@@ -13,9 +13,12 @@ visible when Spark's own job-level commit (_SUCCESS) has completed.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class Catalog:
@@ -152,9 +155,19 @@ class Catalog:
         os.rename(tmp, path)
 
     def append(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> str:
+        self,
+        df: DataFrame,
+        table: str,
+        partition_by: list[str] | None = None,
+        row_count: Callable[[], int] | None = None,
+    ) -> str | None:
         """Write df as a new immutable snapshot; returns its path.
+
+        ``row_count``, when given, is called once the write job has
+        finished and returns how many rows it wrote (typically read from
+        an ``Observation`` attached to ``df``, which the write fills in
+        the same job). Zero rows commit nothing: the ``.tmp`` directory
+        is removed and None is returned.
 
         ``partition_by`` writes the snapshot hive-partitioned on the
         given columns (north rule: results partitioned on a url-hash
@@ -170,6 +183,9 @@ class Catalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
+        if row_count is not None and row_count() == 0:
+            shutil.rmtree(tmp, ignore_errors=True)
+            return None
         os.makedirs(self._table_dir(table), exist_ok=True)
         n = self._next_seq(table)
         dest = os.path.join(self._table_dir(table), f"snap-{n:06d}-{uuid.uuid4().hex[:8]}")
@@ -180,7 +196,11 @@ class Catalog:
         return dest
 
     def read(
-        self, spark: SparkSession, table: str, as_of: int | None = None
+        self,
+        spark: SparkSession,
+        table: str,
+        as_of: int | None = None,
+        schema: StructType | None = None,
     ) -> DataFrame | None:
         """Union of ALL snapshot rows — append history included. A
         crash between compact's append and its rmtree leaves the
@@ -196,10 +216,14 @@ class Catalog:
         a column added in a later snapshot appears (NULL for earlier
         rows) instead of being silently dropped by the default
         first-file-schema read. Footer merging costs O(files), bounded
-        by auto-compaction."""
+        by auto-compaction. Footer reads are a Spark job; a caller that
+        knows the table's ``schema`` passes it, and no footer is read
+        (columns absent from a snapshot read as NULL)."""
         snaps = self._snaps_as_of(table, as_of)
         if not snaps:
             return None
+        if schema is not None:
+            return spark.read.schema(schema).parquet(*snaps)
         return spark.read.option("mergeSchema", "true").parquet(*snaps)
 
     def read_latest(
@@ -263,8 +287,6 @@ class Catalog:
         ``_next_seq``), and the next ``compact`` run collapses the
         leftovers; plain ``read`` unions everything and will show the
         duplicates."""
-        import shutil
-
         from pyspark.sql import Window, functions as F
 
         snaps = self.snapshots(table)

@@ -77,12 +77,54 @@ def test_kill_and_resume_exact(spark, corpus, tmp_path):
     r2 = run_extraction(spark, pages, store, num_partitions=8)
     assert not r2.skipped
     assert r1.n_processed + r2.n_processed == N_ROWS
+    # n_input counts the pages given to the run, n_processed the ones
+    # the manifest anti-join left
+    assert r2.n_input == N_ROWS and r2.n_processed < N_ROWS
 
     res = read_results(spark, store)
     assert res.count() == N_ROWS
     assert res.join(
         corpus.select("url", "golden_text"), "url"
     ).filter("text != golden_text").count() == 0
+
+
+# Spark jobs one run_extraction launches on a fresh store: results (salt
+# exchange + write), lineage (exchange + write), manifest, runs
+FRESH_RUN_JOBS = 6
+
+
+def test_fresh_run_job_budget(spark, corpus, tmp_path):
+    """Run counts come from Observations filled by the results write, so
+    a bookkeeping job (a probe, a count, a footer read) that comes back
+    shows up here as a job over the budget."""
+    sc = spark.sparkContext
+    group = f"job-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "run_extraction job budget")
+    try:
+        r = run_extraction(spark, pages_view(corpus), str(tmp_path / "store"), num_partitions=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r.n_processed == N_ROWS
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= FRESH_RUN_JOBS
+
+
+@pytest.mark.parametrize("buckets", [None, 4])
+def test_memoized_rerun_commits_nothing(spark, corpus, tmp_path, buckets):
+    """A rerun over a finished corpus writes no rows: no table gains a
+    snapshot and the empty write leaves no directory under .tmp (with
+    partition_buckets the empty write also goes through partitionBy)."""
+    import os
+
+    store = str(tmp_path / "store")
+    pages = pages_view(corpus)
+    run_extraction(spark, pages, store, num_partitions=8, partition_buckets=buckets)
+    cat = Catalog(store)
+    tables = ("results", "lineage", "manifest", "runs")
+    before = {t: cat.snapshots(t) for t in tables}
+    r = run_extraction(spark, pages, store, num_partitions=8, partition_buckets=buckets)
+    assert r.skipped and r.n_processed == 0 and r.n_input == N_ROWS
+    assert {t: cat.snapshots(t) for t in tables} == before
+    assert os.listdir(os.path.join(store, ".tmp")) == []
 
 
 def test_changed_input_reprocessed(spark, corpus, tmp_path):
@@ -333,6 +375,24 @@ def test_session_split_config_matches_row_groups(spark):
     shared row groups superlinearly."""
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == "8m"
     assert spark.conf.get("spark.hadoop.parquet.block.size") == str(8 * 1024 * 1024)
+
+
+def test_session_defaults_fit_the_host(monkeypatch, tmp_path):
+    """Without overrides the driver heap is at most half of physical RAM
+    and checkpoints go under the system temp dir; the env var still
+    wins."""
+    import os
+    import tempfile
+
+    from neurostore_text_extraction_spark.session import checkpoint_dir, default_driver_memory
+
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert default_driver_memory().endswith("m")
+    assert int(default_driver_memory()[:-1]) <= max(phys_mb // 2, 1024)
+    monkeypatch.delenv("SPARK_CHECKPOINT_DIR", raising=False)
+    assert checkpoint_dir().startswith(tempfile.gettempdir())
+    monkeypatch.setenv("SPARK_CHECKPOINT_DIR", str(tmp_path))
+    assert checkpoint_dir() == str(tmp_path)
 
 
 def test_results_carry_config_and_survive_compaction_per_config(spark, corpus, tmp_path):
