@@ -24,6 +24,7 @@ import json
 import multiprocessing as mp
 import os
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -71,9 +72,11 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    pages_dir = args.pages_dir
+    # where bench.py cached its pages: $SPARK_GRAFT_PAGES_DIR, else the
+    # newest nse_bench_pages_* under the system temp dir
+    pages_dir = args.pages_dir or os.environ.get("SPARK_GRAFT_PAGES_DIR")
     if pages_dir is None:
-        cands = sorted(glob.glob("/dev/shm/nse_bench_pages_*"))
+        cands = sorted(glob.glob(os.path.join(tempfile.gettempdir(), "nse_bench_pages_*")))
         if not cands:
             raise SystemExit("no bench pages parquet found; run bench.py first")
         pages_dir = cands[-1]

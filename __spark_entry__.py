@@ -60,10 +60,10 @@ from neurostore_text_extraction_spark.operators.extract import extract_pages
 TOK = r"\w\w+"  # sklearn-parity token pattern (runs of >=2 word chars)
 
 
-# per-(path, parallelism) fan-out decision cache: the Hadoop FS size
-# probe is driver-side metadata only, but queries() rebuilds frames
-# many times per bench pass
-_FANOUT: dict[tuple[str, int], int] = {}
+# fan-out decision cache: queries() rebuilds frames many times per bench
+# pass. The key carries the path's length and mtime (one stat), so a
+# path rewritten under the same driver gets a fresh decision.
+_FANOUT: dict[tuple[str, int, int, int], int] = {}
 
 
 def _scan_fanout(spark: SparkSession, path: str) -> int:
@@ -86,22 +86,21 @@ def _scan_fanout(spark: SparkSession, path: str) -> int:
     times (minhash: 5 consumers) instead pay one extra 64-task stage
     PER consumer and get 1.3-2x SLOWER, so fan-out stays off there."""
     par = spark.sparkContext.defaultParallelism
-    key = (path, par)
-    if key not in _FANOUT:
-        n = 0
-        try:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(path)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        jvm = spark._jvm
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        st = fs.getFileStatus(p)
+        key = (path, par, st.getLen(), st.getModificationTime())
+        if key not in _FANOUT:
             size = fs.getContentSummary(p).getLength()
             max_split = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
                 spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
             )
-            if (size + max_split - 1) // max_split < par:
-                n = par * 2  # 2 waves: smooths per-doc cost variance
-        except Exception:
-            n = 0  # unsized source: leave the scan alone
-        _FANOUT[key] = n
+            # 2 waves: smooths per-doc cost variance
+            _FANOUT[key] = par * 2 if (size + max_split - 1) // max_split < par else 0
+    except Exception:
+        return 0  # unsized source: leave the scan alone
     return _FANOUT[key]
 
 

@@ -6,7 +6,11 @@ change detection, kill-and-resume, lineage accounting."""
 import pyspark.sql.functions as F
 import pytest
 
-from neurostore_text_extraction_spark.operators.extract import extract_pages
+from neurostore_text_extraction_spark.operators.extract import (
+    extract_pages,
+    salt_by_url,
+    salt_partitions,
+)
 from neurostore_text_extraction_spark.plans.pipeline import (
     read_results,
     replay_postprocess,
@@ -101,11 +105,51 @@ def test_fresh_run_job_budget(spark, corpus, tmp_path):
     group = f"job-budget-{tmp_path.name}"
     sc.setJobGroup(group, "run_extraction job budget")
     try:
-        r = run_extraction(spark, pages_view(corpus), str(tmp_path / "store"), num_partitions=8)
+        # default num_partitions: sizing the salt exchange runs no job
+        r = run_extraction(spark, pages_view(corpus), str(tmp_path / "store"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert r.n_processed == N_ROWS
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= FRESH_RUN_JOBS
+
+
+def test_default_salt_runs_one_task_per_slot(spark, corpus, tmp_path):
+    """The test corpus is far below one wave of scan splits, so the salt
+    exchange runs exactly one extraction task per slot: one lineage row
+    each, none coalesced away by AQE."""
+    store = str(tmp_path / "store")
+    run_extraction(spark, pages_view(corpus), store)
+    lineage = Catalog(store).read(spark, "lineage")
+    assert lineage.count() == spark.sparkContext.defaultParallelism
+
+
+def test_salt_partitions_rule():
+    mb = 2**20
+    # small input: one wave
+    assert salt_partitions(1, 4, 8 * mb) == 4
+    assert salt_partitions(32 * mb, 4, 8 * mb) == 4
+    # large input: whole waves, at most split_bytes per task
+    assert salt_partitions(32 * mb + 1, 4, 8 * mb) == 8
+    n = salt_partitions(10**12, 8, 8 * mb)
+    assert n % 8 == 0 and 10**12 / n <= 8 * mb < 10**12 / (n - 8)
+    # unknown size: no count, i.e. today's AQE-coalesced repartition
+    assert salt_partitions(None, 4, 8 * mb) is None
+    assert salt_partitions(0, 4, 8 * mb) is None
+
+
+def test_salt_by_url_count_from_size_estimate(spark):
+    """A sized input gets an explicit count (whole waves); an input
+    Spark cannot size (an RDD) keeps the count-less repartition."""
+
+    def count(salted):
+        opt = salted._jdf.queryExecution().logical().optNumPartitions()
+        return None if opt.isEmpty() else opt.get()
+
+    sized = spark.range(100).selectExpr("cast(id as string) as url")
+    assert count(salt_by_url(sized)) == spark.sparkContext.defaultParallelism
+    assert count(salt_by_url(sized, 3)) == 3
+    unsized = spark.createDataFrame(sized.rdd, sized.schema)
+    assert count(salt_by_url(unsized)) is None
 
 
 @pytest.mark.parametrize("buckets", [None, 4])
