@@ -23,7 +23,7 @@ __version__ = "0.1.0"
 
 def _guard_zip_rereads() -> None:
     """Re-read a zip archive on ``importlib.invalidate_caches()`` only
-    when its ``(st_mtime_ns, st_size)`` changed.
+    when its ``(st_ino, st_size, st_mtime_ns, st_ctime_ns)`` changed.
 
     ``pyspark.worker_util.setup_spark_files`` calls
     ``importlib.invalidate_caches()`` before every Python task, and
@@ -33,7 +33,9 @@ def _guard_zip_rereads() -> None:
     identity ``mapInArrow`` task: 260 ms, 27 ms with the guard, CPython
     3.11 on 4 cores). 3.13 re-reads lazily, so the guard is installed on
     older versions only. A rewritten archive (a re-shipped
-    ``--py-files`` zip) is still re-read."""
+    ``--py-files`` zip) is still re-read: a rename-replace changes the
+    inode, and an in-place write changes the ctime, which no copy that
+    preserves the mtime can set back."""
     import os
     import sys
     import zipimport
@@ -41,12 +43,12 @@ def _guard_zip_rereads() -> None:
     if sys.version_info >= (3, 13):
         return
     reread = zipimport.zipimporter.invalidate_caches
-    stamps: dict[str, tuple[int, int] | None] = {}
+    stamps: dict[str, tuple[int, int, int, int] | None] = {}
 
     def invalidate_caches(self):
         try:
             st = os.stat(self.archive)
-            stamp = (st.st_mtime_ns, st.st_size)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
         except OSError:
             stamp = None
         files = zipimport._zip_directory_cache.get(self.archive)

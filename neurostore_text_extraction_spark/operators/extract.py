@@ -12,9 +12,10 @@ Scale design (the part that matters at 100 TB / 10^12 docs):
   set the critical path. Payload sizes are heavy-tailed too, so the
   shuffle also breaks up accidental fat-file partition locality from
   the scan. The partition count ``n`` is whole waves of task slots,
-  sized from the input's byte estimate (:func:`salt_partitions`), so
-  AQE cannot coalesce the exchange into a task count that leaves a
-  wave part-empty.
+  sized from the input's byte estimate and capped at
+  ``spark.sql.shuffle.partitions`` (:func:`salt_partitions`), so AQE
+  cannot coalesce the exchange into a task count that leaves a wave
+  part-empty.
 - **Arrow batching**: ``spark.sql.execution.arrow.maxRecordsPerBatch``
   is capped (session.py) so one multi-MB page cannot blow a batch.
 - **Fault isolation** (reference behavior, ``ns_extract/pipelines/
@@ -45,21 +46,27 @@ from ..functions.html_extract import extract_document
 from ..schemas import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
 
 
-def salt_partitions(est_bytes: int | None, slots: int, split_bytes: int) -> int | None:
+def salt_partitions(
+    est_bytes: int | None, slots: int, split_bytes: int, max_partitions: int
+) -> int | None:
     """Partition count for the salt exchange: whole waves of ``slots``
-    tasks, each reading about ``split_bytes`` of input or less.
+    tasks, each reading about ``split_bytes`` of input or less, but
+    never more partitions than ``max_partitions`` rounded down to whole
+    waves (and never less than one wave).
 
-    ``slots × max(1, ceil(est_bytes / (slots × split_bytes)))``, or None
-    when the size is unknown."""
+    ``slots × clamp(ceil(est_bytes / (slots × split_bytes)), 1,
+    max_partitions // slots)``, or None when the size is unknown."""
     if est_bytes is None or est_bytes <= 0:
         return None
-    return slots * max(1, -(-est_bytes // (slots * split_bytes)))
+    waves = -(-est_bytes // (slots * split_bytes))
+    return slots * max(1, min(waves, max_partitions // slots))
 
 
 def _estimated_salt_partitions(df: DataFrame) -> int | None:
     """:func:`salt_partitions` for ``df`` from driver-side metadata only:
-    the optimized plan's ``sizeInBytes``, ``defaultParallelism`` and
-    ``spark.sql.files.maxPartitionBytes``. No Spark job runs."""
+    the optimized plan's ``sizeInBytes``, ``defaultParallelism``,
+    ``spark.sql.files.maxPartitionBytes`` and
+    ``spark.sql.shuffle.partitions``. No Spark job runs."""
     try:
         spark = df.sparkSession
         conf = spark._jsparkSession.sessionState().conf()
@@ -69,6 +76,7 @@ def _estimated_salt_partitions(df: DataFrame) -> int | None:
             None if est >= conf.defaultSizeInBytes() else est,
             spark.sparkContext.defaultParallelism,
             conf.filesMaxPartitionBytes(),
+            conf.numShufflePartitions(),
         )
     except (AttributeError, Py4JError, CapturedException):
         return None  # no JVM plan (Spark Connect) or no statistics
@@ -86,7 +94,14 @@ def salt_by_url(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     is one AQE never coalesces, so no wave runs part-empty (on 1,500
     pages and 4 slots AQE coalesced the count-less repartition's 8
     shuffle partitions into 5 uneven tasks: two waves, the fifth task
-    alone). An input with no usable estimate keeps the count-less
+    alone). The count is capped at ``spark.sql.shuffle.partitions``
+    rounded down to whole waves, the count the count-less repartition
+    starts from, so a large input never gets more shuffle partitions
+    than before; past the cap a task reads more than
+    ``maxPartitionBytes``. Size estimates are upper bounds: the
+    anti-join of a resume run is sized as its whole left side, so a
+    resume with little left to do can get up to the cap in small
+    tasks. An input with no usable estimate keeps the count-less
     repartition.
     """
     if not num_partitions:

@@ -7,8 +7,8 @@ Local mode here, but every knob is chosen for the 1000-executor /
 - ``spark.sql.shuffle.partitions`` (2x cores, at least 8) is the
   initial count of the exchanges that name none — joins, aggregates —
   which AQE then coalesces; on a real cluster set it ~2-3x total cores.
-  The extraction salt exchange does not use it: it names its own count,
-  whole waves of task slots sized from the input's bytes
+  The extraction salt exchange names its own count instead, whole waves
+  of task slots sized from the input's bytes and capped at this value
   (``operators/extract.salt_partitions``), which AQE leaves alone.
 - Arrow batch size capped so one fat page (multi-MB html) cannot blow
   up a single Arrow record batch inside a pandas UDF (SURVEY.md §7

@@ -126,30 +126,52 @@ def test_default_salt_runs_one_task_per_slot(spark, corpus, tmp_path):
 def test_salt_partitions_rule():
     mb = 2**20
     # small input: one wave
-    assert salt_partitions(1, 4, 8 * mb) == 4
-    assert salt_partitions(32 * mb, 4, 8 * mb) == 4
+    assert salt_partitions(1, 4, 8 * mb, 8) == 4
+    assert salt_partitions(32 * mb, 4, 8 * mb, 8) == 4
     # large input: whole waves, at most split_bytes per task
-    assert salt_partitions(32 * mb + 1, 4, 8 * mb) == 8
-    n = salt_partitions(10**12, 8, 8 * mb)
+    assert salt_partitions(32 * mb + 1, 4, 8 * mb, 8) == 8
+    n = salt_partitions(10**12, 8, 8 * mb, 10**6)
     assert n % 8 == 0 and 10**12 / n <= 8 * mb < 10**12 / (n - 8)
+    # very large input: capped at max_partitions rounded down to whole
+    # waves, and never below one wave
+    assert salt_partitions(10**14, 8000, 8 * mb, 20000) == 16000
+    assert salt_partitions(10**14, 8, 8 * mb, 4) == 8
     # unknown size: no count, i.e. today's AQE-coalesced repartition
-    assert salt_partitions(None, 4, 8 * mb) is None
-    assert salt_partitions(0, 4, 8 * mb) is None
+    assert salt_partitions(None, 4, 8 * mb, 8) is None
+    assert salt_partitions(0, 4, 8 * mb, 8) is None
 
 
 def test_salt_by_url_count_from_size_estimate(spark):
-    """A sized input gets an explicit count (whole waves); an input
-    Spark cannot size (an RDD) keeps the count-less repartition."""
+    """A sized input gets an explicit count in whole waves, capped at
+    the shuffle partitions; an input Spark cannot size (an RDD) keeps
+    the count-less repartition."""
 
     def count(salted):
         opt = salted._jdf.queryExecution().logical().optNumPartitions()
         return None if opt.isEmpty() else opt.get()
 
+    slots = spark.sparkContext.defaultParallelism
     sized = spark.range(100).selectExpr("cast(id as string) as url")
-    assert count(salt_by_url(sized)) == spark.sparkContext.defaultParallelism
+    assert count(salt_by_url(sized)) == slots
     assert count(salt_by_url(sized, 3)) == 3
     unsized = spark.createDataFrame(sized.rdd, sized.schema)
     assert count(salt_by_url(unsized)) is None
+
+    est = sized._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    split = -(-int(est) // (2 * slots))  # the estimate fills two waves
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+        spark.conf.set("spark.sql.shuffle.partitions", str(3 * slots))
+        assert count(salt_by_url(sized)) == 2 * slots
+        # a one-byte split asks for ~est waves; the cap keeps whole waves
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+        spark.conf.set("spark.sql.shuffle.partitions", str(3 * slots + 1))
+        assert count(salt_by_url(sized)) == 3 * slots
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 @pytest.mark.parametrize("buckets", [None, 4])

@@ -4,10 +4,12 @@
 ``importlib.invalidate_caches()`` before every Python task; before
 CPython 3.13 every ``zipimporter`` re-reads its whole archive directory
 on that call. The package installs a guard that skips the re-read of an
-archive whose mtime and size are unchanged. These tests count
-``zipimport._read_directory`` calls across ``invalidate_caches()``."""
+archive whose inode, size, mtime and ctime are unchanged. These tests
+count ``zipimport._read_directory`` calls across ``invalidate_caches()``
+and re-imports."""
 
 import importlib
+import os
 import sys
 import zipfile
 import zipimport
@@ -24,7 +26,7 @@ def _write_zip(path, source):
         zf.writestr(f"{MOD}.py", source)
 
 
-def _reads_across_invalidate(monkeypatch, archive):
+def _reads_during(monkeypatch, archive, action):
     reads = []
     read = zipimport._read_directory
 
@@ -34,27 +36,52 @@ def _reads_across_invalidate(monkeypatch, archive):
         return read(path)
 
     monkeypatch.setattr(zipimport, "_read_directory", counting)
-    importlib.invalidate_caches()
+    action()
     monkeypatch.setattr(zipimport, "_read_directory", read)
     return len(reads)
 
 
-def test_unchanged_zip_is_not_reread_and_rewritten_zip_is(tmp_path, monkeypatch):
-    archive = str(tmp_path / "probe.zip")
-    _write_zip(archive, "VALUE = 1\n")
-    monkeypatch.syspath_prepend(archive)
+def _reimport():
+    """``invalidate_caches()`` then a fresh import of the probe module.
+    The archive is read once across the two on every CPython version:
+    eagerly by the call before 3.13, lazily by the import from 3.13."""
+    importlib.invalidate_caches()
+    del sys.modules[MOD]
+    return importlib.import_module(MOD).VALUE
+
+
+@pytest.fixture
+def archive(tmp_path, monkeypatch):
+    path = str(tmp_path / "probe.zip")
+    _write_zip(path, "VALUE = 1\n")
+    monkeypatch.syspath_prepend(path)
     monkeypatch.delitem(sys.modules, MOD, raising=False)
     assert importlib.import_module(MOD).VALUE == 1
     # the first call may read the archive once: nothing has stamped it yet
     importlib.invalidate_caches()
+    return path
 
-    assert _reads_across_invalidate(monkeypatch, archive) == 0
+
+def test_unchanged_zip_is_not_reread_and_rewritten_zip_is(archive, monkeypatch):
+    assert _reads_during(monkeypatch, archive, importlib.invalidate_caches) == 0
 
     # a re-shipped archive (new size) is re-read and its new code imports
     _write_zip(archive, "VALUE = 22  # rewritten\n")
-    assert _reads_across_invalidate(monkeypatch, archive) == 1
-    del sys.modules[MOD]
-    assert importlib.import_module(MOD).VALUE == 22
+    values = []
+    assert _reads_during(monkeypatch, archive, lambda: values.append(_reimport())) == 1
+    assert values == [22]
+
+
+def test_rewrite_with_same_size_and_mtime_is_reread(archive, monkeypatch):
+    """A copy that keeps size and mtime (``cp -p``, ``rsync -t``) still
+    changes the ctime, so the archive is re-read."""
+    st = os.stat(archive)
+    _write_zip(archive, "VALUE = 2\n")
+    os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(archive).st_size == st.st_size
+    values = []
+    assert _reads_during(monkeypatch, archive, lambda: values.append(_reimport())) == 1
+    assert values == [2]
 
 
 def test_guard_reaches_python_workers(spark):
