@@ -1,18 +1,19 @@
 """Incremental recomputation + exact resume (O1–O3 in SURVEY.md §4,
-north rule "checkpoint manifests enabling exact resume").
+north rule "checkpoint manifests enabling exact resume"; the results
+table is the manifest).
 
 Reference behavior generalized:
 - config identity: 6-byte shake_256 of version + sorted kwargs
   (``ns_extract/pipelines/base.py:264-298``);
-- change detection: per-doc input MD5 vs newest prior manifest row
+- change detection: per-doc input MD5 vs the newest prior result
   (``base.py:372-411``, ``utils.py:40-54``);
 - the work queue is everything *not* matched — a ``left_anti`` join,
   the distributed form of ``_filter_unprocessed_studies``
   (``base.py:509-532``).
 
-At 10^12 docs the manifest is itself a big table; the anti-join
-shuffles both sides on ``url`` — the same key the results table is
-written by, so with bucketed/Iceberg tables this is a co-located join.
+At 10^12 docs the results table is itself big; the anti-join
+shuffles both sides on ``url`` — the key the results table is written
+by, so with bucketed/Iceberg tables this is a co-located join.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ import hashlib
 import json
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..sources.catalog import SNAPSHOT_PATH
 
 
 def config_hash(version: str, kwargs: dict | None = None) -> str:
@@ -32,26 +35,32 @@ def config_hash(version: str, kwargs: dict | None = None) -> str:
 
 def unprocessed(
     pages: DataFrame,
-    manifest: DataFrame | None,
+    prior: DataFrame | None,
     cfg_hash: str,
     id_col: str = "url",
     md5_col: str = "input_md5",
 ) -> DataFrame:
-    """pages rows with no manifest entry matching (url, input_md5,
-    config_hash) — new docs, changed docs, and docs from other configs.
-
-    ``md5(html)`` is computed JVM-side (native ``F.md5``), so the skip
+    """pages rows whose md5 differs from the newest ``prior`` result
+    (a results table read, or None) for their url under ``cfg_hash`` —
+    new docs, changed docs (also changed back to an older version), and
+    docs from other configs. A null payload has a null md5, so md5s
+    match null-safely. ``md5(html)`` is native ``F.md5``: the skip
     decision never touches Python.
     """
     with_md5 = pages.withColumn("_cur_md5", F.md5(F.col("html")))
-    if manifest is None:
+    if prior is None:
         return with_md5.drop("_cur_md5")
+    # the newest md5 per url: greatest snapshot path, the order
+    # Catalog.read_latest picks by (paths sort by sequence number)
     done = (
-        manifest.where(F.col("config_hash") == cfg_hash)
-        .select(F.col(id_col), F.col(md5_col).alias("_cur_md5"))
-        .distinct()
+        prior.where(F.col("config_hash") == cfg_hash)
+        .groupBy(F.col(id_col).alias("_done_id"))
+        .agg(F.max_by(md5_col, F.col(SNAPSHOT_PATH)).alias("_done_md5"))
     )
-    return with_md5.join(done, [id_col, "_cur_md5"], "left_anti").drop("_cur_md5")
+    match = (F.col(id_col) == F.col("_done_id")) & F.col("_cur_md5").eqNullSafe(
+        F.col("_done_md5")
+    )
+    return with_md5.join(done, match, "left_anti").drop("_cur_md5")
 
 
 def changed_ids(

@@ -3,26 +3,28 @@
 re-expressed as one DataFrame job per SURVEY.md §3.2's mapping):
 
     pages → observe(input count)
-          → left_anti(manifest)            # O2 incremental / exact resume
+          → left_anti(newest prior result) # O2 incremental / exact resume
           → repartition(xxhash64(url))     # skew salting (north rule)
           → mapInArrow(extract)            # Arrow-batched front-end
           → validate → observe(rows, errors)
           → results snapshot               # the one job that extracts
-          → lineage, manifest, runs        # from the written snapshot
+          → lineage, runs                  # from the written snapshot
 
 Job plan of a run: the results write runs the anti-join, extraction and
 validation, and fills both Observations in the same job, so the run's
-counts cost no count job. Lineage is a ``groupBy`` over the written
-snapshot and the manifest a projection of it, both read back with the
-schema just written (no footer job); the runs row is built JVM-side. On
-a fresh store that is 6 Spark jobs: results (salt exchange + write),
-lineage (exchange + write), manifest, runs.
+counts cost no count job. The anti-join reads the results table with
+its schema (no footer job), pruned to url, input_md5 and config_hash.
+Lineage is a ``groupBy`` over the written snapshot, read back the same
+way; the runs row is built JVM-side. On a fresh store that is 5 Spark
+jobs: results (salt exchange + write), lineage (exchange + write), runs.
 
 Whole-run memoization (O1, ``base.py:157-162``): if nothing is left
-after the manifest anti-join, the results write produces no rows,
+after the anti-join, the results write produces no rows,
 ``Catalog.append`` commits nothing, and the run returns early. Exact
 resume: a killed run commits nothing (snapshot rename is atomic), a
 partially complete multi-snapshot history replays only missing urls.
+Results rows carry their ``run_id``; the run's date is in its ``runs``
+row.
 
 ``post_process="only"`` mode (``base.py:172-215``): replay a transform
 over the persisted results table without re-extraction — see
@@ -36,11 +38,12 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from ..operators.extract import extract_pages, lineage_from_extracted
 from ..operators.incremental import config_hash, unprocessed
-from ..schemas import EXTRACTED_SCHEMA, MANIFEST_SCHEMA, RUNS_SCHEMA
+from ..operators.schemaproc import with_validity
+from ..schemas import EXTRACTED_SCHEMA, RESULTS_SCHEMA, RUNS_SCHEMA
 from ..sources.catalog import Catalog
 
 EXTRACTOR_NAME = "main_content_extraction"
@@ -52,7 +55,7 @@ class RunResult:
     run_id: str
     config_hash: str
     n_input: int  # pages given to the run
-    n_processed: int  # pages left after the manifest anti-join, i.e. written
+    n_processed: int  # pages left after the resume anti-join, i.e. written
     n_errors: int
     skipped: bool  # whole-run cache hit
 
@@ -69,12 +72,12 @@ def run_extraction(
     salt: bool = True,
     partition_buckets: int | None = None,
 ) -> RunResult:
-    """See module docstring. ``auto_compact_after``: once the results/
-    manifest snapshot history exceeds this many snapshots it is
-    compacted to the latest row per key, keeping ``read_results``'s
-    latest-pick (and the manifest anti-join's right side) bounded at
-    O(auto_compact_after) files per scan for arbitrarily long-lived
-    pipelines. ``None`` disables.
+    """See module docstring. ``auto_compact_after``: once a table's
+    snapshot history exceeds this many snapshots it is compacted to the
+    latest row per key, keeping ``read_results``'s latest-pick (and the
+    resume anti-join's right side) bounded at O(auto_compact_after)
+    files per scan for arbitrarily long-lived pipelines. ``None``
+    disables.
 
     ``partition_buckets=N`` writes the results table hive-partitioned
     on ``url_bucket = pmod(xxhash64(url), N)`` (north rule: results
@@ -89,10 +92,10 @@ def run_extraction(
     of the reference DependentPipeline's group-identity hash
     (``base.py:646-669``) and its ``-1``/``-2`` fresh-dir suffixing
     (``base.py:163-165``, ``utils.py:91-114``): the same config over a
-    DIFFERENT corpus is a cache miss and recomputes into fresh manifest
+    DIFFERENT corpus is a cache miss and recomputes into fresh results
     rows, while re-running the identical corpus still memoizes. Costs
     one column-pruned scan of the id column per run; default off — the
-    per-(url, md5, config) manifest match already handles per-doc
+    per-(url, config) newest-md5 match already handles per-doc
     incrementality."""
     cat = Catalog(store_root)
     if corpus_scoped:
@@ -110,8 +113,10 @@ def run_extraction(
     # ``pages`` (the corpus digest above).
     inputs, outputs = Observation(), Observation()
     pages = pages.observe(inputs, F.count(F.lit(1)).alias("n"))
-    manifest = cat.read(spark, "manifest", schema=MANIFEST_SCHEMA) if resume else None
-    todo = unprocessed(pages, manifest, cfg)
+    # resume state: the results table, pruned to the resume key
+    key = T.StructType([RESULTS_SCHEMA[c] for c in ("url", "input_md5", "config_hash")])
+    prior = cat.read(spark, "results", schema=key) if resume else None
+    todo = unprocessed(pages, prior, cfg)
 
     # ``salt`` is an execution detail (same rows either way), so it is
     # deliberately NOT part of the config hash — toggling it must not
@@ -120,27 +125,23 @@ def run_extraction(
     # per-row validity = no kernel error AND non-empty text AND schema
     # conformance (required-marked fields non-null — the generic
     # StructType-walk validator, ≙ the reference's per-study pydantic
-    # validation at base.py:1072-1095; failures flag, never abort)
-    from ..operators.schemaproc import with_validity
-
-    validated = (
-        with_validity(ext, EXTRACTED_SCHEMA, out_col="_schema_ok")
-        .withColumn(
-            "valid",
+    # validation at base.py:1072-1095; failures flag, never abort).
+    # Rows carry their run's identity, so per-config results survive
+    # compaction and can be selected on read.
+    validated = with_validity(ext, EXTRACTED_SCHEMA, out_col="_schema_ok").select(
+        *EXTRACTED_SCHEMA.names,
+        (
             F.col("error").isNull()
             & F.col("_schema_ok")
             & F.col("text").isNotNull()
-            & (F.length("text") > 0),
-        )
-        .drop("_schema_ok")
-        # rows carry their run's config identity (≙ the reference's
-        # <config_hash>/ output directory level): per-config results
-        # survive compaction and can be selected on read.
-        .withColumn("config_hash", F.lit(cfg))
+            & (F.length("text") > 0)
+        ).alias("valid"),
+        F.lit(cfg).alias("config_hash"),
+        F.lit(run_id).alias("run_id"),
     )
-    # One pass: write results, derive lineage/manifest from the written
-    # snapshot (re-read is a cheap columnar scan; avoids caching the
-    # heavy text in memory and avoids recomputing the UDF 3x).
+    # One pass: write results, derive lineage from the written snapshot
+    # (re-read is a cheap columnar scan; avoids caching the heavy text
+    # in memory and avoids recomputing the UDF).
     partition_by = None
     if partition_buckets:
         # repartition ON the bucket before the partitioned write: each
@@ -170,16 +171,6 @@ def run_extraction(
     written = spark.read.schema(validated.schema).parquet(snap)
 
     cat.append(lineage_from_extracted(written, run_id), "lineage")
-    cat.append(
-        written.select(
-            "url",
-            "input_md5",
-            F.lit(cfg).alias("config_hash"),
-            F.lit(run_id).alias("run_id"),
-            F.lit(now).alias("date"),
-        ),
-        "manifest",
-    )
     run_row = (
         run_id,
         EXTRACTOR_NAME,
@@ -199,21 +190,14 @@ def run_extraction(
     if auto_compact_after is not None:
         # results keyed by (url, config_hash): latest row per url per
         # config survives, so compaction never drops another config's
-        # results; manifest keyed by its full match tuple so every
-        # config's skip rows survive; lineage/runs rows are unique per
-        # key, so their compaction is a pure file-count bound.
+        # results or resume state; lineage/runs rows are unique per key,
+        # so their compaction is a pure file-count bound.
         cat.maybe_compact(
             spark,
             "results",
             ["url", "config_hash"],
             max_snapshots=auto_compact_after,
             partition_by=["url_bucket"] if partition_buckets else None,
-        )
-        cat.maybe_compact(
-            spark,
-            "manifest",
-            ["url", "input_md5", "config_hash"],
-            max_snapshots=auto_compact_after,
         )
         cat.maybe_compact(
             spark, "lineage", ["run_id", "partition_id"], max_snapshots=auto_compact_after
@@ -233,26 +217,16 @@ def read_results(
 
     ``config_hash`` restricts the pick to one run configuration (≙
     reading one ``<config_hash>/`` directory in the reference's output
-    store); default is latest-across-configs. The filter lands before
-    the window, so it prunes at the scan."""
+    store); default is latest-across-configs. A filter on a window
+    partition column is pushed below the window, so it prunes at the
+    scan."""
     cat = Catalog(store_root)
-    snaps = cat.snapshots("results")
-    if not snaps:
+    if not cat.exists("results"):
         raise FileNotFoundError(f"no results table under {store_root}")
     if config_hash is None:
         return cat.read_latest(spark, "results", ["url"])
-    df = (
-        cat.read(spark, "results")
-        .where(F.col("config_hash") == config_hash)
-        .withColumn("_snap", F.input_file_name())
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("url").orderBy(F.col("_snap").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_snap")
+    return cat.read_latest(spark, "results", ["url", "config_hash"]).where(
+        F.col("config_hash") == config_hash
     )
 
 

@@ -57,6 +57,18 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
+# A results row: the extracted row, its validity flag and the identity
+# of the run that wrote it (its config_hash ≙ the reference's
+# <config_hash>/ output directory level).
+RESULTS_SCHEMA = T.StructType(
+    EXTRACTED_SCHEMA.fields
+    + [
+        T.StructField("valid", T.BooleanType(), True),
+        T.StructField("config_hash", T.StringType(), False),
+        T.StructField("run_id", T.StringType(), False),
+    ]
+)
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -65,16 +77,6 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("error_count", T.LongType(), False),
         T.StructField("bytes", T.LongType(), False),
         T.StructField("wall_ms", T.DoubleType(), False),
-        T.StructField("date", T.StringType(), False),
-    ]
-)
-
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("input_md5", T.StringType(), True),
-        T.StructField("config_hash", T.StringType(), False),
-        T.StructField("run_id", T.StringType(), False),
         T.StructField("date", T.StringType(), False),
     ]
 )

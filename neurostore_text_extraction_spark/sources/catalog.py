@@ -20,6 +20,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+# A row's file path: snapshot dirs sort by sequence number, so the newest
+# row per key has the greatest path. Unlike ``input_file_name()`` this
+# scan metadata column is deterministic: filters above it reach the scan.
+SNAPSHOT_PATH = "_metadata.file_path"
+
 
 class Catalog:
     def __init__(self, root: str) -> None:
@@ -245,20 +250,12 @@ class Catalog:
         snaps = self._snaps_as_of(table, as_of)
         if not snaps:
             return None
-        df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*snaps)
-            .withColumn("_snap", F.input_file_name())
-        )
-        order = [F.col("_snap").desc()]
+        df = spark.read.option("mergeSchema", "true").parquet(*snaps)
+        order = [F.col(SNAPSHOT_PATH).desc()]
         if order_col is not None:
             order.append(F.col(order_col).desc())
         w = Window.partitionBy(*key_cols).orderBy(*order)
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_snap")
-        )
+        return df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
 
     def exists(self, table: str) -> bool:
         return bool(self.snapshots(table))
@@ -274,9 +271,9 @@ class Catalog:
         """MERGE-style compaction: collapse the snapshot history to the
         latest row per key (last snapshot wins; within-snapshot ties
         broken by ``order_col`` desc) written as ONE new snapshot, then
-        drop the old snapshots. Bounds manifest growth for long-lived
-        incremental pipelines — without it the anti-join's right side
-        grows with every run.
+        drop the old snapshots. Bounds the results history for
+        long-lived incremental pipelines — without it the resume
+        anti-join's right side grows with every run.
 
         Single-writer protocol (like the append path): the new snapshot
         is committed atomically by rename before the old ones are

@@ -9,7 +9,7 @@ bounded state, unlike ``dropDuplicates`` on a stream, whose state grows
 forever (the OOM every unbounded-state streaming job eventually hits at
 crawl scale). First-observation-wins within the watermark horizon;
 duplicates older than the horizon are the batch layer's job
-(the manifest anti-join already makes replays idempotent).
+(the resume anti-join already makes replays idempotent).
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ def dedup_stream(
       ``webtext.canonical_url_col`` upstream to fold mirrors).
     - ``by_content=True`` adds md5(content) to the key, so a
       re-crawled url with CHANGED bytes passes through (the streaming
-      analogue of the manifest's (url, input_md5) match) while
+      analogue of the resume's (url, input_md5) match) while
       byte-identical re-fetches are dropped. ``content_col`` names
       the content column; None auto-picks ``html`` when present else
       ``text`` (post-extraction streams carry no raw html — the

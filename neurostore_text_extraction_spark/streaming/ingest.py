@@ -3,7 +3,7 @@ batch-only; this is the optional micro-batch path — new page files →
 the same extraction stage graph → catalog snapshots, via foreachBatch).
 
 ``readStream`` over a directory of pages parquet; each micro-batch runs
-:func:`plans.pipeline.run_extraction`'s stage graph (manifest anti-join
+:func:`plans.pipeline.run_extraction`'s stage graph (resume anti-join
 included, so replayed files are idempotent — exactly-once by dedup).
 With ``availableNow=True`` this drains the backlog and stops: the batch
 pipeline and the stream share one code path.

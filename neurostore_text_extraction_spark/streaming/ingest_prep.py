@@ -11,7 +11,7 @@ Stage properties on a stream:
 - **exact dedup** (:func:`streaming.dedup.dedup_stream`):
   ``dropDuplicatesWithinWatermark`` keyed on (url[, md5(html)]) —
   per-key state bounded by the event-time watermark horizon; replays
-  older than the horizon are the batch manifest's job.
+  older than the horizon are the batch resume anti-join's job.
 - **sampler** (:func:`operators.webtext.sample_by_hash`): the keep
   decision is a pure function of ``xxhash64(key, seed)`` — stateless,
   deterministic across engines and re-partitionings, so the streamed

@@ -5,7 +5,7 @@ clusters").
     spark-submit --master <cluster> --py-files <pkg.zip> \
         scripts/submit_extract.py \
         --input  <pages parquet dir>   # (url, warc_ts, html, text, lang)
-        --store  <output store root>   # results/lineage/manifest/runs
+        --store  <output store root>   # results/lineage/runs
         [--num-partitions N] [--salt] [--corpus-scoped] [--no-resume]
         [--partition-buckets N]        # hive-partition results on url-hash
 

@@ -253,7 +253,8 @@ def test_streaming_ingest(spark, tmp_path):
         "text != golden_text"
     )
     assert mism.count() == 0
-    # replay with same checkpoint: no duplicates (idempotent by manifest)
+    # replay with a new checkpoint: no duplicates (idempotent by the
+    # resume anti-join)
     stream_extract(spark, input_dir, store, str(tmp_path / "ckpt2"), num_partitions=4)
     assert read_results(spark, store).count() == 40
     gen.unpersist()
@@ -263,7 +264,7 @@ def test_streaming_checkpoint_resume_skips_seen_files(spark, tmp_path):
     """True checkpoint resume: after draining batch 1, a restart with
     the SAME checkpoint must not re-read the already-committed source
     files — only files added after the first drain enter the second
-    run's micro-batches (source-offset tracking, not just manifest
+    run's micro-batches (source-offset tracking, not just resume
     idempotency)."""
     from neurostore_text_extraction_spark.plans.pipeline import read_results
     from neurostore_text_extraction_spark.sources.catalog import Catalog
@@ -288,8 +289,8 @@ def test_streaming_checkpoint_resume_skips_seen_files(spark, tmp_path):
     assert Catalog(store).read(spark, "runs").count() == runs_after_first
 
     # add batch 2 (new urls); resume processes ONLY the new files —
-    # observable through the manifest: batch-1 urls keep their original
-    # run_id (they were never re-extracted, not even re-matched)
+    # observable through the results rows: batch-1 urls keep their
+    # original run_id (they were never re-extracted, not even re-matched)
     g2 = generate_pages(spark, 40, 2).where(
         "CAST(regexp_extract(url, '/([0-9]+)$', 1) AS INT) >= 20"
     )
@@ -297,9 +298,8 @@ def test_streaming_checkpoint_resume_skips_seen_files(spark, tmp_path):
     stream_extract(spark, input_dir, store, ckpt, num_partitions=2)
     res = read_results(spark, store)
     assert res.count() == 40
-    manifest = Catalog(store).read(spark, "manifest")
-    assert manifest.count() == 40  # one manifest row per url: no rework
-    assert manifest.select("run_id").distinct().count() == runs_after_first + 1
+    assert Catalog(store).read(spark, "results").count() == 40  # no rework
+    assert res.select("run_id").distinct().count() == runs_after_first + 1
 
 
 def test_embedding_neardup_pairs(spark):

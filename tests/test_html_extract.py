@@ -13,6 +13,7 @@ from neurostore_text_extraction_spark.functions.html_extract import (
     extract_html,
     looks_like_jats,
 )
+from test_fixture_f1 import BASE as REFERENCE_FIXTURES, needs_reference_fixtures
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens")
 
@@ -100,13 +101,14 @@ def test_determinism_pure_function():
     sorted(glob.glob(os.path.join(GOLDEN_DIR, "*.txt"))),
     ids=lambda p: os.path.basename(p),
 )
+@needs_reference_fixtures
 def test_reference_fixture_goldens(golden_path):
     """Byte-identical contract vs committed goldens (our single-node
     snapshot over the reference's own fixture corpus,
     tests/data/sample_inputs/*/source/*)."""
     name = os.path.basename(golden_path)[: -len(".txt")]
     study, src, kind = name.rsplit("_", 2)
-    pattern = f"/root/reference/tests/data/sample_inputs/{study}/source/{src}/*.*"
+    pattern = f"{REFERENCE_FIXTURES}/{study}/source/{src}/*.*"
     files = [f for f in glob.glob(pattern) if f.endswith((".html", ".xml"))]
     assert files, f"fixture missing for {name}"
     text, spans, got_kind = extract_document(open(files[0], "rb").read())

@@ -16,10 +16,12 @@ from neurostore_text_extraction_spark.plans.pipeline import (
     replay_postprocess,
     run_extraction,
 )
+from neurostore_text_extraction_spark.schemas import RESULTS_SCHEMA
 from neurostore_text_extraction_spark.sources.catalog import Catalog
 from neurostore_text_extraction_spark.sources.pages import generate_pages, pages_view
 
 N_ROWS = 150
+TABLES = ("results", "lineage", "runs")  # all a store holds
 
 
 @pytest.fixture(scope="module")
@@ -59,8 +61,9 @@ def test_pipeline_run_resume_idempotent(spark, corpus, tmp_path):
     r2 = run_extraction(spark, pages, store, num_partitions=8)
     assert r2.skipped
 
-    # results table: byte-identical to goldens
+    # results table: byte-identical to goldens, written as declared
     res = read_results(spark, store)
+    assert res.schema.simpleString() == RESULTS_SCHEMA.simpleString()
     assert res.count() == N_ROWS
     mism = res.join(corpus.select("url", "golden_text"), "url").filter(
         "text != golden_text"
@@ -82,7 +85,7 @@ def test_kill_and_resume_exact(spark, corpus, tmp_path):
     assert not r2.skipped
     assert r1.n_processed + r2.n_processed == N_ROWS
     # n_input counts the pages given to the run, n_processed the ones
-    # the manifest anti-join left
+    # the resume anti-join left
     assert r2.n_input == N_ROWS and r2.n_processed < N_ROWS
 
     res = read_results(spark, store)
@@ -93,8 +96,8 @@ def test_kill_and_resume_exact(spark, corpus, tmp_path):
 
 
 # Spark jobs one run_extraction launches on a fresh store: results (salt
-# exchange + write), lineage (exchange + write), manifest, runs
-FRESH_RUN_JOBS = 6
+# exchange + write), lineage (exchange + write), runs
+FRESH_RUN_JOBS = 5
 
 
 def test_fresh_run_job_budget(spark, corpus, tmp_path):
@@ -185,11 +188,11 @@ def test_memoized_rerun_commits_nothing(spark, corpus, tmp_path, buckets):
     pages = pages_view(corpus)
     run_extraction(spark, pages, store, num_partitions=8, partition_buckets=buckets)
     cat = Catalog(store)
-    tables = ("results", "lineage", "manifest", "runs")
-    before = {t: cat.snapshots(t) for t in tables}
+    before = {t: cat.snapshots(t) for t in TABLES}
     r = run_extraction(spark, pages, store, num_partitions=8, partition_buckets=buckets)
     assert r.skipped and r.n_processed == 0 and r.n_input == N_ROWS
-    assert {t: cat.snapshots(t) for t in tables} == before
+    assert {t: cat.snapshots(t) for t in TABLES} == before
+    assert sorted(os.listdir(store)) == [".tmp", *sorted(TABLES)]
     assert os.listdir(os.path.join(store, ".tmp")) == []
 
 
@@ -240,21 +243,18 @@ def test_replay_postprocess_only(spark, corpus, tmp_path):
     assert out.filter("n_chars > 0").count() == N_ROWS
 
 
-def test_error_isolation_in_pipeline(spark, tmp_path):
-    import pandas as pd
+GOOD_HTML = b"<html><body><p>Fine page with plenty of words to keep here always, truly.</p></body></html>"
 
-    bad = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "url": ["u1", "u2"],
-                "warc_ts": [None, None],
-                "html": [None, b"<html><body><p>Fine page with plenty of words to keep here always, truly.</p></body></html>"],
-                "text": [None, None],
-                "lang": [None, None],
-            }
-        ),
+
+def _pages(spark, *url_html):
+    return spark.createDataFrame(
+        [(url, None, html, None, None) for url, html in url_html],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
+
+
+def test_error_isolation_in_pipeline(spark, tmp_path):
+    bad = _pages(spark, ("u1", None), ("u2", GOOD_HTML))
     store = str(tmp_path / "store6")
     r = run_extraction(spark, bad, store, num_partitions=2)
     assert r.n_errors == 1
@@ -263,17 +263,59 @@ def test_error_isolation_in_pipeline(spark, tmp_path):
     assert res.filter("not valid").count() == 1
 
 
-def test_manifest_compaction(spark, corpus, tmp_path):
-    """Catalog.compact collapses the snapshot history to latest-per-key
-    in ONE snapshot; resume semantics (skip-on-no-change) survive it."""
-    from pyspark.sql import functions as F
+def test_null_html_rerun_is_memoized(spark, tmp_path):
+    """A null payload's error row holds a null input md5; the rerun
+    matches it null-safely, so it is skipped and commits nothing."""
+    pages = _pages(spark, ("u1", None), ("u2", GOOD_HTML))
+    store = str(tmp_path / "store")
+    run_extraction(spark, pages, store, num_partitions=2)
+    cat = Catalog(store)
+    before = {t: cat.snapshots(t) for t in TABLES}
+    r = run_extraction(spark, pages, store, num_partitions=2)
+    assert r.skipped and r.n_processed == 0
+    assert {t: cat.snapshots(t) for t in TABLES} == before
 
-    from neurostore_text_extraction_spark.sources.catalog import Catalog
 
+def test_error_row_stays_done_until_html_changes(spark, tmp_path):
+    """Only new or changed inputs are processed (SURVEY P2): a page
+    whose extraction raised holds an error row with its payload's md5,
+    so a rerun skips it; new html for the url is extracted."""
+    store = str(tmp_path / "store")
+    # nesting past the parser's recursion limit raises RecursionError
+    deep = _pages(spark, ("u1", b"<div>" * 5000 + b"x"))
+    r1 = run_extraction(spark, deep, store, num_partitions=1)
+    assert r1.n_errors == 1
+    assert run_extraction(spark, deep, store, num_partitions=1).skipped
+    r3 = run_extraction(spark, _pages(spark, ("u1", GOOD_HTML)), store, num_partitions=1)
+    assert not r3.skipped and r3.n_processed == 1 and r3.n_errors == 0
+    assert [r.valid for r in read_results(spark, store).collect()] == [True]
+
+
+def test_resume_compares_newest_prior_md5(spark, corpus, tmp_path):
+    """A page whose html goes A -> B -> A is extracted again on the
+    third run: the skip decision compares with the newest prior result
+    for the url, not with every md5 the url ever had."""
+    store = str(tmp_path / "store")
+    pages = pages_view(corpus)
+    a_row, b_row = corpus.orderBy("url").limit(2).collect()
+    assert a_row.golden_text != b_row.golden_text
+    a = pages.where(F.col("url") == a_row.url)
+    b = a.withColumn("html", F.lit(bytes(b_row.html)))
+    assert not run_extraction(spark, a, store, num_partitions=1).skipped
+    assert not run_extraction(spark, b, store, num_partitions=1).skipped
+    r3 = run_extraction(spark, a, store, num_partitions=1)
+    assert not r3.skipped and r3.n_processed == 1
+    assert [r.text for r in read_results(spark, store).collect()] == [a_row.golden_text]
+
+
+def test_resume_survives_results_compaction(spark, corpus, tmp_path):
+    """Compacting results to the newest row per (url, config) keeps the
+    resume state: the latest corpus is a whole-run cache hit, and pages
+    changed back to their first version are extracted again."""
     store = str(tmp_path / "store")
     pages = pages_view(corpus)
     run_extraction(spark, pages, store, num_partitions=8)
-    # second run over a changed subset -> second manifest snapshot
+    # second run over a changed subset -> second results snapshot
     changed = pages.withColumn(
         "html",
         F.when(
@@ -281,21 +323,17 @@ def test_manifest_compaction(spark, corpus, tmp_path):
             F.concat(F.col("html"), F.lit(b"<!-- v2 -->")),
         ).otherwise(F.col("html")),
     )
-    assert pages.where(F.xxhash64("url") % 17 == 0).count() > 0
+    n_changed = pages.where(F.xxhash64("url") % 17 == 0).count()
+    assert n_changed > 0
     run_extraction(spark, changed, store, num_partitions=8)
     cat = Catalog(store)
-    assert len(cat.snapshots("manifest")) == 2
-    before = cat.read(spark, "manifest")
-    n_keys = before.select("url").distinct().count()
+    assert len(cat.snapshots("results")) == 2
 
-    cat.compact(spark, "manifest", key_cols=["url"], order_col="date")
-    assert len(cat.snapshots("manifest")) == 1
-    after = cat.read(spark, "manifest")
-    assert after.count() == n_keys  # one latest row per url
-    # the compacted manifest still memoizes: re-run of the changed
-    # corpus is a whole-run cache hit
-    r3 = run_extraction(spark, changed, store, num_partitions=8)
-    assert r3.skipped
+    cat.compact(spark, "results", key_cols=["url", "config_hash"])
+    assert len(cat.snapshots("results")) == 1
+    assert cat.read(spark, "results").count() == N_ROWS  # one row per url
+    assert run_extraction(spark, changed, store, num_partitions=8).skipped
+    assert run_extraction(spark, pages, store, num_partitions=8).n_processed == n_changed
 
 
 def test_compact_append_compact_ordering(spark, tmp_path):
@@ -400,7 +438,6 @@ def test_auto_compaction_bounds_snapshot_history(spark, corpus, tmp_path):
         )
         run_extraction(spark, changed, store, num_partitions=4, auto_compact_after=4)
     cat = Catalog(store)
-    assert len(cat.snapshots("manifest")) <= 5
     assert len(cat.snapshots("results")) <= 5
     # memoization survives compaction: identical re-run skips
     last = pages.withColumn(
