@@ -24,21 +24,24 @@ Scale design (the part that matters at 100 TB / 10^12 docs):
   single corrupt page cannot kill a trillion-doc job.
 - **Lineage** (north rule; generalizes info.json,
   ``ns_extract/pipelines/data_structures.py:48-56``): each output row
-  carries its ``partition_id`` (TaskContext) and amortized ``wall_us``;
-  :func:`lineage_from_extracted` rolls them up to one row per
-  partition.
+  carries its ``partition_id`` (TaskContext) and amortized ``wall_us``.
+  Given a :func:`lineage_accumulator`, each extraction task also adds
+  one record per partition (rows, errors, html bytes, wall time) as it
+  finishes, so lineage is a by-product of the extraction job rather than
+  a second pass over its output; :func:`lineage_from_extracted` turns
+  the records into one lineage row per partition on the driver.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import time
-from collections.abc import Iterator
 from datetime import datetime, timezone
 
-import pandas as pd
 from py4j.protocol import Py4JError
 from pyspark import TaskContext
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, functions as F
 
@@ -124,16 +127,40 @@ def _arrow_out_schema():
     return _ARROW_OUT
 
 
-def _extract_batches(batches):
+class _LineageParam(AccumulatorParam):
+    """Merges ``{partition_id: (rows, errors, html_bytes, wall_us)}``
+    dicts. A later record for a partition replaces the earlier one, so a
+    re-sent update of a re-run task adds nothing."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value1, value2):
+        value1.update(value2)
+        return value1
+
+
+def lineage_accumulator(spark) -> Accumulator:
+    """A fresh accumulator for :func:`extract_pages`'s per-partition
+    lineage records."""
+    return spark.sparkContext.accumulator({}, _LineageParam())
+
+
+def _extract_batches(batches, lineage: Accumulator | None = None):
     """mapInArrow kernel: consumes pyarrow RecordBatches directly —
     avoids the pandas conversion of the heavy ``html`` binary column
     (measured: pandas round-trip of a 300MB batch stream costs 2-4x the
-    zero-copy Arrow path)."""
+    zero-copy Arrow path).
+
+    With ``lineage``, adds one record for the task's partition once its
+    input is exhausted: rows, error rows, html bytes and the sum of the
+    rows' ``wall_us``. A task that saw no rows adds nothing."""
     import pyarrow as pa
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
     schema = _arrow_out_schema()
+    rows = n_errors = n_bytes = wall_us = 0
     for rb in batches:
         t0 = time.perf_counter()
         n = rb.num_rows
@@ -181,6 +208,10 @@ def _extract_batches(batches):
                 kinds.append("error")
                 errors.append(f"{type(exc).__name__}: {exc}")
         per_row = int((time.perf_counter() - t0) * 1e6) // max(n, 1)
+        rows += n
+        n_errors += n - errors.count(None)
+        n_bytes += sum(nbytes)
+        wall_us += per_row * n
         yield pa.RecordBatch.from_arrays(
             [
                 urls.cast(schema.field("url").type),
@@ -197,12 +228,15 @@ def _extract_batches(batches):
             ],
             schema=schema,
         )
+    if lineage is not None and rows:
+        lineage += {pid: (rows, n_errors, n_bytes, wall_us)}
 
 
 def extract_pages(
     pages: DataFrame,
     num_partitions: int | None = None,
     salt: bool = True,
+    lineage: Accumulator | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → EXTRACTED_SCHEMA rows.
 
@@ -225,34 +259,42 @@ def extract_pages(
     scale the default stays True: corpus layout is not guaranteed, and
     correctness of load balance beats the one-pass saving unless the
     scan is known-balanced.
+
+    ``lineage`` (a :func:`lineage_accumulator`) collects one record per
+    non-empty partition from the job that runs the extraction. A record
+    is added each time a task's update is applied, so the caller must
+    know how often that happens in the stage that runs the extraction
+    (see :func:`plans.pipeline.run_extraction`).
     """
     cols = pages.select("url", "warc_ts", "html", "lang")
     if salt:
         cols = salt_by_url(cols, num_partitions)
-    return cols.mapInArrow(_extract_batches, EXTRACTED_SCHEMA)
+    fn = _extract_batches
+    if lineage is not None:
+        fn = functools.partial(_extract_batches, lineage=lineage)
+    return cols.mapInArrow(fn, EXTRACTED_SCHEMA)
 
 
-def lineage_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
-    """Roll per-row instrumentation up to one lineage row per partition
-    (north rule: partition id, input count, bytes, wall time)."""
+def lineage_from_extracted(records: dict, run_id: str):
+    """One lineage row per partition (north rule: partition id, input
+    count, error count, bytes, wall time) from a
+    :func:`lineage_accumulator`'s records, as a pyarrow table typed by
+    ``LINEAGE_SCHEMA``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     now = datetime.now(timezone.utc).isoformat()
-    return (
-        extracted.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("input_count"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
-                "error_count"
-            ),
-            F.sum("n_html_bytes").alias("bytes"),
-            (F.sum("wall_us") / 1000.0).alias("wall_ms"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id"),
-            F.col("input_count").cast("long"),
-            F.col("error_count").cast("long"),
-            F.col("bytes").cast("long"),
-            F.col("wall_ms").cast("double"),
-            F.lit(now).alias("date"),
-        )
+    pids = sorted(records)
+    rows, errors, nbytes, wall_us = zip(*map(records.get, pids)) if pids else ((),) * 4
+    return pa.Table.from_pydict(
+        {
+            "run_id": [run_id] * len(pids),
+            "partition_id": pids,
+            "input_count": rows,
+            "error_count": errors,
+            "bytes": nbytes,
+            "wall_ms": [w / 1000.0 for w in wall_us],
+            "date": [now] * len(pids),
+        },
+        schema=to_arrow_schema(LINEAGE_SCHEMA),
     )

@@ -5,26 +5,30 @@ re-expressed as one DataFrame job per SURVEY.md §3.2's mapping):
     pages → observe(input count)
           → left_anti(newest prior result) # O2 incremental / exact resume
           → repartition(xxhash64(url))     # skew salting (north rule)
-          → mapInArrow(extract)            # Arrow-batched front-end
+          → mapInArrow(extract)            # Arrow-batched front-end,
+                                           #   lineage records per task
           → validate → observe(rows, errors)
-          → results snapshot               # the one job that extracts
-          → lineage, runs                  # from the written snapshot
+          → results staged                 # the one job that extracts
+          → lineage, runs staged           # by the driver, no Spark job
+          → rename lineage, runs, results  # results last: the commit
 
 Job plan of a run: the results write runs the anti-join, extraction and
-validation, and fills both Observations in the same job, so the run's
-counts cost no count job. The anti-join reads the results table with
-its schema (no footer job), pruned to url, input_md5 and config_hash.
-Lineage is a ``groupBy`` over the written snapshot, read back the same
-way; the runs row is built JVM-side. On a fresh store that is 5 Spark
-jobs: results (salt exchange + write), lineage (exchange + write), runs.
+validation, fills both Observations and collects the lineage records in
+the same job, so the run's counts and lineage cost no job. The anti-join
+reads the results table with its schema (no footer job), pruned to url,
+input_md5 and config_hash. The driver writes the lineage rows and the
+runs row with pyarrow. On a fresh store the only Spark jobs are the
+results write's salt exchange and write; the results rename is the
+run's commit point.
 
 Whole-run memoization (O1, ``base.py:157-162``): if nothing is left
-after the anti-join, the results write produces no rows,
-``Catalog.append`` commits nothing, and the run returns early. Exact
-resume: a killed run commits nothing (snapshot rename is atomic), a
-partially complete multi-snapshot history replays only missing urls.
-Results rows carry their ``run_id``; the run's date is in its ``runs``
-row.
+after the anti-join, the results write produces no rows, nothing is
+committed to any table, and the run returns early. Exact resume: resume
+and ``read_results`` read only the results table, whose rename commits
+the run after its lineage and runs rows. A run killed before that
+rename is invisible to both and is redone in full by the next run; a
+multi-snapshot history replays only missing urls. Results rows carry
+their ``run_id``; the run's date is in its ``runs`` row.
 
 ``post_process="only"`` mode (``base.py:172-215``): replay a transform
 over the persisted results table without re-extraction — see
@@ -38,9 +42,11 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.extract import extract_pages, lineage_from_extracted
+from ..operators.extract import extract_pages, lineage_accumulator, lineage_from_extracted
 from ..operators.incremental import config_hash, unprocessed
 from ..operators.schemaproc import with_validity
 from ..schemas import EXTRACTED_SCHEMA, RESULTS_SCHEMA, RUNS_SCHEMA
@@ -121,7 +127,16 @@ def run_extraction(
     # ``salt`` is an execution detail (same rows either way), so it is
     # deliberately NOT part of the config hash — toggling it must not
     # invalidate the cache.
-    ext = extract_pages(todo, num_partitions=num_partitions, salt=salt)
+    #
+    # Each extraction task adds its partition's lineage record to
+    # ``lineage``. Without ``partition_buckets`` the extraction runs in
+    # the results write's result stage, where Spark applies a successful
+    # task's update exactly once. With ``partition_buckets`` it runs in
+    # the bucket exchange's shuffle-map stage, where a re-run stage can
+    # send a task's update again; records are keyed by partition id, so
+    # the re-sent record replaces the first and adds no second one.
+    lineage = lineage_accumulator(spark)
+    ext = extract_pages(todo, num_partitions=num_partitions, salt=salt, lineage=lineage)
     # per-row validity = no kernel error AND non-empty text AND schema
     # conformance (required-marked fields non-null — the generic
     # StructType-walk validator, ≙ the reference's per-study pydantic
@@ -139,9 +154,6 @@ def run_extraction(
         F.lit(cfg).alias("config_hash"),
         F.lit(run_id).alias("run_id"),
     )
-    # One pass: write results, derive lineage from the written snapshot
-    # (re-read is a cheap columnar scan; avoids caching the heavy text
-    # in memory and avoids recomputing the UDF).
     partition_by = None
     if partition_buckets:
         # repartition ON the bucket before the partitioned write: each
@@ -161,32 +173,43 @@ def run_extraction(
     validated = validated.observe(
         outputs, F.count(F.lit(1)).alias("n"), F.count("error").alias("errors")
     )
-    snap = cat.append(
-        validated, "results", partition_by=partition_by, row_count=lambda: outputs.get["n"]
-    )
+    try:
+        staged = cat.stage(
+            validated, "results", partition_by=partition_by, row_count=lambda: outputs.get["n"]
+        )
+    finally:
+        # The driver's accumulator registry never frees an accumulator,
+        # and a stream calls this once per micro-batch: drop the records.
+        # They are one 4-tuple per non-empty extraction partition, about
+        # 0.25 KB each (CPython, measured), so 10^6 partitions hold about
+        # 250 MB on the driver.
+        records, lineage.value = lineage.value, {}
     n_input = inputs.get["n"]
-    if snap is None:
+    if staged is None:
         # O1 whole-run memoization: the anti-join left nothing to do
         return RunResult(run_id, cfg, n_input, 0, 0, True)
-    written = spark.read.schema(validated.schema).parquet(snap)
 
-    cat.append(lineage_from_extracted(written, run_id), "lineage")
-    run_row = (
-        run_id,
-        EXTRACTOR_NAME,
-        EXTRACTOR_VERSION,
-        cfg,
-        json.dumps(kwargs or {}, sort_keys=True),
-        EXTRACTED_SCHEMA.json(),
-        now,
+    run_row = {
+        "run_id": run_id,
+        "extractor": EXTRACTOR_NAME,
+        "version": EXTRACTOR_VERSION,
+        "config_hash": cfg,
+        "kwargs_json": json.dumps(kwargs or {}, sort_keys=True),
+        "schema_json": EXTRACTED_SCHEMA.json(),
+        "date": now,
+    }
+    staged_lineage = cat.stage_arrow(lineage_from_extracted(records, run_id), "lineage")
+    staged_runs = cat.stage_arrow(
+        pa.Table.from_pylist([run_row], schema=to_arrow_schema(RUNS_SCHEMA)), "runs"
     )
-    # one JVM-side row: no Python worker, one output file
-    cat.append(
-        spark.range(1, numPartitions=1).select(
-            *(F.lit(v).alias(f.name) for f, v in zip(RUNS_SCHEMA.fields, run_row))
-        ),
-        "runs",
-    )
+    # The results rename is the run's commit point. Resume and
+    # read_results read only results, so they never see a run killed
+    # before it. A lineage or runs reader may: a run killed between the
+    # renames leaves lineage (and runs) rows whose run_id has no results
+    # rows; join on results' run_id to skip them.
+    cat.commit(staged_lineage, "lineage")
+    cat.commit(staged_runs, "runs")
+    cat.commit(staged, "results", partition_by=partition_by)
     if auto_compact_after is not None:
         # results keyed by (url, config_hash): latest row per url per
         # config survives, so compaction never drops another config's

@@ -33,8 +33,9 @@ SPAN_TYPE = T.ArrayType(
 )
 
 # Output of the extraction stage (mapInArrow) — one row per page.
-# partition_id / wall_us / n_html_bytes feed the per-partition lineage
-# aggregation (north rule: per-partition lineage rows). "required"
+# partition_id / wall_us / n_html_bytes are the per-row side of the
+# per-partition lineage rows (north rule), which the extraction tasks
+# total as they write these rows. "required"
 # metadata drives the generic schema-conformance validity flag
 # (operators/schemaproc.with_validity ≙ the reference's per-row
 # pydantic validation, base.py:1072-1095).

@@ -3,11 +3,14 @@ Iceberg runtime jar assumed — partitioned parquet + snapshot dirs +
 atomic tmp-dir renames behind a thin catalog so a real Iceberg catalog
 is a config swap).
 
-Write protocol: each append writes to ``<root>/.tmp/<uuid>`` then
-``os.rename``s to ``<root>/<table>/snap-<n>-<uuid>`` — rename is atomic
-on one filesystem, so readers never observe a partial snapshot (the
-analogue of Iceberg's snapshot commit). A snapshot only becomes
-visible when Spark's own job-level commit (_SUCCESS) has completed.
+Write protocol: each append stages its rows under ``<root>/.tmp/<uuid>``
+then commits them by ``os.rename`` to ``<root>/<table>/snap-<n>-<uuid>``
+— rename is atomic on one filesystem, so readers never observe a
+partial snapshot (the analogue of Iceberg's snapshot commit). A
+snapshot only becomes visible when Spark's own job-level commit
+(_SUCCESS) has completed. A writer that commits to several tables
+stages all of them first and then renames them in the order it needs
+(:func:`plans.pipeline.run_extraction` renames results last).
 """
 
 from __future__ import annotations
@@ -16,9 +19,13 @@ import os
 import shutil
 import uuid
 from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # A row's file path: snapshot dirs sort by sequence number, so the newest
 # row per key has the greatest path. Unlike ``input_file_name()`` this
@@ -41,37 +48,6 @@ class Catalog:
         return sorted(
             os.path.join(d, s) for s in os.listdir(d) if s.startswith("snap-")
         )
-
-    def snapshot_seqs(self, table: str) -> list[int]:
-        """Committed snapshot sequence numbers, ascending (the table's
-        time-travel axis)."""
-        return [
-            int(os.path.basename(s).split("-")[1]) for s in self.snapshots(table)
-        ]
-
-    def _snaps_as_of(self, table: str, as_of: int | None) -> list[str]:
-        """Snapshots visible at sequence ``as_of`` (inclusive); None =
-        current. Compaction expires history like Iceberg snapshot
-        expiration: a compacted snapshot REPLACES its inputs under a
-        higher sequence number, so time travel reaches back only to the
-        oldest retained snapshot — asking for an expired sequence
-        raises rather than silently returning post-compact state."""
-        snaps = self.snapshots(table)
-        if as_of is None:
-            return snaps
-        seqs = [int(os.path.basename(s).split("-")[1]) for s in snaps]
-        if snaps and as_of > max(seqs):
-            raise ValueError(
-                f"snapshot {as_of} of table {table!r} was never committed; "
-                f"newest is {max(seqs)}"
-            )
-        kept = [s for s, n in zip(snaps, seqs) if n <= as_of]
-        if snaps and not kept:
-            raise ValueError(
-                f"snapshot {as_of} of table {table!r} has been expired by "
-                f"compaction; oldest retained is {seqs[0]}"
-            )
-        return kept
 
     def _next_seq(self, table: str) -> int:
         """max(existing snapshot numbers) + 1 — NOT len(snapshots):
@@ -159,31 +135,35 @@ class Catalog:
             json.dump({"partition_by": spec}, f)
         os.rename(tmp, path)
 
-    def append(
+    def _tmp_path(self) -> str:
+        return os.path.join(self.root, ".tmp", uuid.uuid4().hex)
+
+    def stage(
         self,
         df: DataFrame,
         table: str,
         partition_by: list[str] | None = None,
         row_count: Callable[[], int] | None = None,
     ) -> str | None:
-        """Write df as a new immutable snapshot; returns its path.
+        """Write df under ``.tmp`` for a later :meth:`commit` into
+        ``table``; returns the staged path.
 
         ``row_count``, when given, is called once the write job has
         finished and returns how many rows it wrote (typically read from
         an ``Observation`` attached to ``df``, which the write fills in
-        the same job). Zero rows commit nothing: the ``.tmp`` directory
+        the same job). Zero rows stage nothing: the ``.tmp`` directory
         is removed and None is returned.
 
         ``partition_by`` writes the snapshot hive-partitioned on the
         given columns (north rule: results partitioned on a url-hash
         bucket) — readers filtering on a partition column prune whole
         directories at planning time. The layout is recorded on first
-        append and VALIDATED on every later append/compact
+        commit and VALIDATED on every later append/compact
         (:meth:`_check_partition_spec`): Spark's multi-path partition
         discovery requires consistent directory shapes, so a mixed
         layout must fail at write time, not read time."""
         self._check_partition_spec(table, partition_by)
-        tmp = os.path.join(self.root, ".tmp", uuid.uuid4().hex)
+        tmp = self._tmp_path()
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -191,20 +171,49 @@ class Catalog:
         if row_count is not None and row_count() == 0:
             shutil.rmtree(tmp, ignore_errors=True)
             return None
+        return tmp
+
+    def stage_arrow(self, data: pa.Table, table: str) -> str:
+        """:meth:`stage` for a pyarrow table written by the calling
+        process, unpartitioned and without a Spark job."""
+        import pyarrow.parquet as pq
+
+        self._check_partition_spec(table, None)
+        tmp = self._tmp_path()
+        os.makedirs(tmp)
+        pq.write_table(data, os.path.join(tmp, "part-00000.parquet"))
+        return tmp
+
+    def commit(self, staged: str, table: str, partition_by: list[str] | None = None) -> str:
+        """Rename a staged directory in as the table's next snapshot;
+        returns its path. The rename is atomic, so readers see the
+        whole snapshot or none of it."""
         os.makedirs(self._table_dir(table), exist_ok=True)
         n = self._next_seq(table)
         dest = os.path.join(self._table_dir(table), f"snap-{n:06d}-{uuid.uuid4().hex[:8]}")
-        os.rename(tmp, dest)
+        os.rename(staged, dest)
         # record only AFTER the snapshot committed: a failed write must
         # not pin a (possibly wrong) layout on a still-empty table
         self._record_partition_spec(table, partition_by)
         return dest
 
+    def append(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_by: list[str] | None = None,
+        row_count: Callable[[], int] | None = None,
+    ) -> str | None:
+        """Write df as a new immutable snapshot: :meth:`stage` then
+        :meth:`commit`. Returns the snapshot's path, or None when
+        ``row_count`` reports zero rows (nothing is committed)."""
+        staged = self.stage(df, table, partition_by, row_count)
+        return None if staged is None else self.commit(staged, table, partition_by)
+
     def read(
         self,
         spark: SparkSession,
         table: str,
-        as_of: int | None = None,
         schema: StructType | None = None,
     ) -> DataFrame | None:
         """Union of ALL snapshot rows — append history included. A
@@ -213,10 +222,6 @@ class Catalog:
         :meth:`read_latest` (or re-run :meth:`compact`, which collapses
         them) when per-key latest-wins semantics are required.
 
-        ``as_of``: Iceberg-style time travel — read the table as it
-        was at snapshot sequence ``as_of`` (see :meth:`snapshot_seqs`);
-        scan-level pruning, only the visible snapshot files are read.
-
         Schema evolution: snapshots are read with ``mergeSchema``, so
         a column added in a later snapshot appears (NULL for earlier
         rows) instead of being silently dropped by the default
@@ -224,7 +229,7 @@ class Catalog:
         by auto-compaction. Footer reads are a Spark job; a caller that
         knows the table's ``schema`` passes it, and no footer is read
         (columns absent from a snapshot read as NULL)."""
-        snaps = self._snaps_as_of(table, as_of)
+        snaps = self.snapshots(table)
         if not snaps:
             return None
         if schema is not None:
@@ -237,17 +242,15 @@ class Catalog:
         table: str,
         key_cols: list[str],
         order_col: str | None = None,
-        as_of: int | None = None,
     ) -> DataFrame | None:
         """Latest row per key across the snapshot history — the same
         rule :meth:`compact` applies (snapshot sequence desc, then
         ``order_col`` desc), so readers see identical results before
         and after compaction, including the duplicated-but-correct
-        state a crashed compact leaves behind. ``as_of`` time-travels
-        the pick to a historical snapshot sequence."""
+        state a crashed compact leaves behind."""
         from pyspark.sql import Window, functions as F
 
-        snaps = self._snaps_as_of(table, as_of)
+        snaps = self.snapshots(table)
         if not snaps:
             return None
         df = spark.read.option("mergeSchema", "true").parquet(*snaps)

@@ -95,25 +95,49 @@ def test_kill_and_resume_exact(spark, corpus, tmp_path):
     ).filter("text != golden_text").count() == 0
 
 
-# Spark jobs one run_extraction launches on a fresh store: results (salt
-# exchange + write), lineage (exchange + write), runs
-FRESH_RUN_JOBS = 5
+# Spark jobs one run_extraction launches on a fresh store: the results
+# write's salt exchange and write. Lineage and runs take no job.
+FRESH_RUN_JOBS = 2
+# ... and on a store holding a prior run, with new and changed pages: the
+# results write, whose anti-join against the prior results adds two jobs
+RESUME_RUN_JOBS = 4
+
+
+def _run_jobs(spark, group, *args, **kwargs):
+    """run_extraction's result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "run_extraction job budget")
+    try:
+        r = run_extraction(spark, *args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return r, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_fresh_run_job_budget(spark, corpus, tmp_path):
-    """Run counts come from Observations filled by the results write, so
-    a bookkeeping job (a probe, a count, a footer read) that comes back
-    shows up here as a job over the budget."""
-    sc = spark.sparkContext
-    group = f"job-budget-{tmp_path.name}"
-    sc.setJobGroup(group, "run_extraction job budget")
-    try:
-        # default num_partitions: sizing the salt exchange runs no job
-        r = run_extraction(spark, pages_view(corpus), str(tmp_path / "store"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    """Run counts come from Observations filled by the results write,
+    and lineage from the same job's tasks, so a bookkeeping job (a
+    probe, a count, a footer read, a lineage pass) that comes back shows
+    up here as a job over the budget."""
+    # default num_partitions: sizing the salt exchange runs no job
+    r, jobs = _run_jobs(spark, f"fresh-{tmp_path.name}", pages_view(corpus), str(tmp_path / "store"))
     assert r.n_processed == N_ROWS
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= FRESH_RUN_JOBS
+    assert jobs <= FRESH_RUN_JOBS
+
+
+def test_resume_run_job_budget(spark, corpus, tmp_path):
+    store = str(tmp_path / "store")
+    pages = pages_view(corpus)
+    run_extraction(spark, pages.where(F.xxhash64("url") % 3 != 0), store)
+    changed = pages.withColumn(
+        "html",
+        F.when(
+            F.xxhash64("url") % 7 == 0, F.concat(F.col("html"), F.lit(b"<!-- changed -->"))
+        ).otherwise(F.col("html")),
+    )
+    r, jobs = _run_jobs(spark, f"resume-{tmp_path.name}", changed, store)
+    assert not r.skipped and 0 < r.n_processed < N_ROWS
+    assert jobs <= RESUME_RUN_JOBS
 
 
 def test_default_salt_runs_one_task_per_slot(spark, corpus, tmp_path):
@@ -219,16 +243,121 @@ def test_changed_input_reprocessed(spark, corpus, tmp_path):
     assert res.count() == N_ROWS
 
 
-def test_lineage_accounts_for_every_row(spark, corpus, tmp_path):
+def _lineage(spark, store, run_id):
+    """The run's lineage rows as sorted (partition_id, input_count,
+    error_count, bytes) tuples."""
+    lin = Catalog(store).read(spark, "lineage").where(F.col("run_id") == run_id)
+    return sorted(
+        tuple(r) for r in lin.select("partition_id", "input_count", "error_count", "bytes").collect()
+    )
+
+
+def _lineage_oracle(spark, store, run_id):
+    """:func:`_lineage` as a groupBy over the run's results rows."""
+    res = Catalog(store).read(spark, "results").where(F.col("run_id") == run_id)
+    agg = res.groupBy("partition_id").agg(
+        F.count(F.lit(1)), F.count("error"), F.sum("n_html_bytes")
+    )
+    return sorted(tuple(r) for r in agg.collect())
+
+
+@pytest.mark.parametrize("buckets", [None, 4])
+def test_lineage_accounts_for_every_row(spark, corpus, tmp_path, buckets):
+    """Lineage records come from the extraction tasks: without buckets
+    from the results write's result stage, with buckets from a
+    shuffle-map stage. Either way they match the written rows."""
     store = str(tmp_path / "store4")
-    run_extraction(spark, pages_view(corpus), store, num_partitions=8)
-    lin = Catalog(store).read(spark, "lineage")
-    agg = lin.agg(
-        F.sum("input_count").alias("n"), F.sum("bytes").alias("b")
-    ).first()
-    assert agg["n"] == N_ROWS
-    assert agg["b"] > 0
-    assert lin.select("partition_id").distinct().count() == lin.count()
+    r = run_extraction(
+        spark, pages_view(corpus), store, num_partitions=8, partition_buckets=buckets
+    )
+    lin = _lineage(spark, store, r.run_id)
+    assert lin == _lineage_oracle(spark, store, r.run_id)
+    assert sum(row[1] for row in lin) == N_ROWS
+    assert sum(row[3] for row in lin) > 0
+
+
+def test_lineage_counts_errors_and_keeps_runs_apart(spark, corpus, tmp_path):
+    """A run with an error row after a run over the corpus in the same
+    session: each run's lineage matches its own rows, so no record of
+    the first run's eight partitions reaches the second's."""
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    ra = run_extraction(spark, pages_view(corpus), a, num_partitions=8)
+    rb = run_extraction(spark, _pages(spark, ("u1", None), ("u2", GOOD_HTML)), b, num_partitions=8)
+    assert _lineage(spark, a, ra.run_id) == _lineage_oracle(spark, a, ra.run_id)
+    lin = _lineage(spark, b, rb.run_id)
+    assert lin == _lineage_oracle(spark, b, rb.run_id)
+    assert sum(row[1] for row in lin) == 2 and sum(row[2] for row in lin) == 1
+    assert Catalog(b).read(spark, "lineage").where(F.col("run_id") != rb.run_id).count() == 0
+
+
+def test_lineage_record_resent_by_a_rerun_task_is_counted_once():
+    """A re-run shuffle-map stage can send a task's update again; the
+    record for its partition replaces the first."""
+    from neurostore_text_extraction_spark.operators.extract import (
+        _LineageParam,
+        lineage_from_extracted,
+    )
+
+    param = _LineageParam()
+    acc = param.zero({})
+    for update in ({0: (3, 1, 30, 300)}, {1: (2, 0, 20, 200)}, {0: (3, 1, 30, 300)}):
+        acc = param.addInPlace(acc, update)
+    lin = lineage_from_extracted(acc, "r").to_pylist()
+    assert [(r["partition_id"], r["input_count"], r["wall_ms"]) for r in lin] == [
+        (0, 3, 0.3),
+        (1, 2, 0.2),
+    ]
+
+
+def test_run_killed_between_renames_leaves_no_partial_run(spark, corpus, tmp_path, monkeypatch):
+    """Three attempts at one run die at their 1st, 2nd and 3rd table
+    rename. After each, every run in results has lineage rows summing
+    to its results rows and one runs row. The rerun is not skipped: it
+    commits all three tables and read_results serves the golden text."""
+    import os
+
+    from neurostore_text_extraction_spark.sources import catalog
+
+    store = str(tmp_path / "store")
+    sub = corpus.where(F.xxhash64("url") % 4 == 0)
+    n = sub.count()
+    real_rename = os.rename
+
+    def per_run(table, agg):
+        df = Catalog(store).read(spark, table)
+        if df is None:
+            return {}
+        return {r[0]: r[1] for r in df.groupBy("run_id").agg(agg).collect()}
+
+    def check_complete():
+        results = per_run("results", F.count(F.lit(1)))
+        lineage = per_run("lineage", F.sum("input_count"))
+        runs = per_run("runs", F.count(F.lit(1)))
+        for run_id, rows in results.items():
+            assert lineage.get(run_id) == rows and runs.get(run_id) == 1
+        return results
+
+    for crash_at in (1, 2, 3):
+        renames = []
+
+        def rename(src, dst):
+            if os.path.basename(dst).startswith("snap-"):
+                renames.append(dst)
+                if len(renames) == crash_at:
+                    raise OSError("killed at a table rename")
+            real_rename(src, dst)
+
+        monkeypatch.setattr(catalog.os, "rename", rename)
+        with pytest.raises(OSError, match="killed"):
+            run_extraction(spark, pages_view(sub), store, num_partitions=2)
+        monkeypatch.undo()
+        check_complete()
+
+    r = run_extraction(spark, pages_view(sub), store, num_partitions=2)
+    assert not r.skipped and r.n_processed == n
+    assert check_complete()[r.run_id] == n
+    got = read_results(spark, store).join(sub.select("url", "golden_text"), "url")
+    assert got.count() == n and got.where("text != golden_text").count() == 0
 
 
 def test_replay_postprocess_only(spark, corpus, tmp_path):
@@ -355,39 +484,6 @@ def test_compact_append_compact_ordering(spark, tmp_path):
     assert cat.read_latest(spark, "t", ["k"]).collect()[0].v == "c"
     cat.compact(spark, "t", key_cols=["k"])
     assert cat.read(spark, "t").collect()[0].v == "c"
-
-
-def test_time_travel_read_as_of(spark, tmp_path):
-    """Iceberg-style time travel: read(as_of=seq) sees the table as it
-    was at that snapshot; compaction expires history (asking for an
-    expired sequence raises, never silently returns post-compact
-    state)."""
-    import pytest as _pytest
-
-    cat = Catalog(str(tmp_path / "cat"))
-    mk = lambda v: spark.createDataFrame([(1, v)], "k int, v string")
-    cat.append(mk("a"), "t")
-    cat.append(mk("b"), "t")
-    cat.append(mk("c"), "t")
-    seqs = cat.snapshot_seqs("t")
-    assert seqs == [0, 1, 2]
-    # as-of the first snapshot: only 'a' visible
-    assert [r.v for r in cat.read(spark, "t", as_of=0).collect()] == ["a"]
-    assert cat.read_latest(spark, "t", ["k"], as_of=1).collect()[0].v == "b"
-    assert cat.read_latest(spark, "t", ["k"], as_of=2).collect()[0].v == "c"
-    # scan-level pruning: the as-of plan reads one snapshot's files
-    plan = cat.read(spark, "t", as_of=0)._jdf.queryExecution().toString()
-    assert "snap-000001" not in plan
-    # compaction expires the history it replaced
-    cat.compact(spark, "t", key_cols=["k"])
-    with _pytest.raises(ValueError, match="expired"):
-        cat.read(spark, "t", as_of=1)
-    # the compacted snapshot itself remains addressable
-    assert cat.read(spark, "t", as_of=cat.snapshot_seqs("t")[0]).collect()[0].v == "c"
-    # a sequence that was never committed raises (no plausible-looking
-    # current-state fallback)
-    with _pytest.raises(ValueError, match="never committed"):
-        cat.read(spark, "t", as_of=99)
 
 
 def test_read_latest_dedupes_crashed_compact_state(spark, tmp_path):
