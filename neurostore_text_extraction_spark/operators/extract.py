@@ -1,6 +1,7 @@
 """The extraction stage: pages → extracted(text, spans) as a single
 Arrow-batched ``mapInArrow`` pass with url-hash salting, per-row fault
-isolation, and lineage instrumentation.
+isolation, and lineage instrumentation; in a pipeline run the same pass
+validates and writes the results files.
 
 Scale design (the part that matters at 100 TB / 10^12 docs):
 
@@ -25,28 +26,34 @@ Scale design (the part that matters at 100 TB / 10^12 docs):
 - **Lineage** (north rule; generalizes info.json,
   ``ns_extract/pipelines/data_structures.py:48-56``): each output row
   carries its ``partition_id`` (TaskContext) and amortized ``wall_us``.
-  Given a :func:`lineage_accumulator`, each extraction task also adds
-  one record per partition (rows, errors, html bytes, wall time) as it
-  finishes, so lineage is a by-product of the extraction job rather than
-  a second pass over its output; :func:`lineage_from_extracted` turns
-  the records into one lineage row per partition on the driver.
+- **Results writer** (the Iceberg pattern: tasks write data files and
+  report them, the driver commits exactly those): given a
+  :class:`ResultsSink`, each extraction task streams its output through
+  a pyarrow ``ParquetWriter`` into the run's staged directory, flags
+  each row's validity itself (:func:`_valid`), and returns one summary
+  row for its partition: rows, errors, html bytes, wall time and the
+  files it wrote. The summary rows are the run's lineage and counts;
+  :func:`lineage_from_extracted` turns them into lineage rows on the
+  driver. No extracted row crosses back into the JVM.
 """
 
 from __future__ import annotations
 
 import functools
 import hashlib
+import os
 import time
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from py4j.protocol import Py4JError
 from pyspark import TaskContext
-from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.errors.exceptions.captured import CapturedException
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..functions.html_extract import extract_document
-from ..schemas import EXTRACTED_SCHEMA, LINEAGE_SCHEMA
+from ..schemas import EXTRACTED_SCHEMA, LINEAGE_SCHEMA, RESULTS_SCHEMA
+from .schemaproc import REQUIRED
 
 
 def salt_partitions(
@@ -114,135 +121,282 @@ def salt_by_url(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     return df.repartition(F.xxhash64(F.col("url")))
 
 
-_ARROW_OUT = None  # lazily built pyarrow schema matching EXTRACTED_SCHEMA
 
 
-def _arrow_out_schema():
-    global _ARROW_OUT
-    if _ARROW_OUT is None:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        _ARROW_OUT = to_arrow_schema(EXTRACTED_SCHEMA)
-    return _ARROW_OUT
+def url_bucket(url: Column, buckets: int) -> Column:
+    """The results bucket of a url, ``pmod(xxhash64(url), buckets)``:
+    uniform in the url, so Zipf-skewed domains cannot make fat
+    buckets."""
+    return F.pmod(F.xxhash64(url), F.lit(buckets)).cast("int")
 
 
-class _LineageParam(AccumulatorParam):
-    """Merges ``{partition_id: (rows, errors, html_bytes, wall_us)}``
-    dicts. A later record for a partition replaces the earlier one, so a
-    re-sent update of a re-run task adds nothing."""
+@dataclass(frozen=True)
+class ResultsSink:
+    """Where a results-writing :func:`extract_pages` puts its rows: the
+    staged directory ``path``, which every executor must reach as a
+    filesystem path; the run's ``config_hash`` and ``run_id``, which
+    every row carries; and ``buckets``, to hive-partition the files on
+    :func:`url_bucket`."""
 
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, value1, value2):
-        value1.update(value2)
-        return value1
-
-
-def lineage_accumulator(spark) -> Accumulator:
-    """A fresh accumulator for :func:`extract_pages`'s per-partition
-    lineage records."""
-    return spark.sparkContext.accumulator({}, _LineageParam())
+    path: str
+    config_hash: str
+    run_id: str
+    buckets: int | None = None
 
 
-def _extract_batches(batches, lineage: Accumulator | None = None):
+# What a results-writing extraction task returns: one row for its
+# partition, with its lineage counts and the files it wrote (relative
+# to the sink path).
+WRITTEN_SCHEMA = T.StructType(
+    [
+        T.StructField("partition_id", T.IntegerType(), False),
+        T.StructField("rows", T.LongType(), False),
+        T.StructField("errors", T.LongType(), False),
+        T.StructField("html_bytes", T.LongType(), False),
+        T.StructField("wall_us", T.LongType(), False),
+        T.StructField("files", T.ArrayType(T.StringType(), False), False),
+    ]
+)
+
+
+def _required_fields(schema: T.StructType) -> tuple[str, ...]:
+    """The top-level fields ``schema`` marks required. :func:`_valid`
+    checks only those, where ``schemaproc.with_validity`` would also
+    check nested ones, so a nested mark raises instead of letting the
+    two rules drift apart."""
+
+    def nested_mark(dtype: T.DataType) -> bool:
+        if isinstance(dtype, T.ArrayType):
+            return nested_mark(dtype.elementType)
+        return isinstance(dtype, T.StructType) and any(
+            (f.metadata or {}).get(REQUIRED) or nested_mark(f.dataType) for f in dtype.fields
+        )
+
+    nested = [f.name for f in schema.fields if nested_mark(f.dataType)]
+    if nested:
+        raise ValueError(f"fields {nested} mark nested fields required; _valid cannot check them")
+    return tuple(f.name for f in schema.fields if (f.metadata or {}).get(REQUIRED))
+
+
+_REQUIRED = _required_fields(EXTRACTED_SCHEMA)  # once per process, at import
+
+
+@functools.cache
+def _arrow_schemas():
+    """EXTRACTED_SCHEMA, the results files' schema and WRITTEN_SCHEMA in
+    pyarrow. The results files take RESULTS_SCHEMA with every top-level
+    field nullable, as in the snapshots compaction writes with Spark: a
+    row with a null required field is still written, flagged invalid."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    results = to_arrow_schema(RESULTS_SCHEMA)
+    return (
+        to_arrow_schema(EXTRACTED_SCHEMA),
+        pa.schema([f.with_nullable(True) for f in results]),
+        to_arrow_schema(WRITTEN_SCHEMA),
+    )
+
+
+def _extract_batch(rb, pid: int):
+    """The kernel over one input batch: an EXTRACTED_SCHEMA batch with
+    one row per page, in input order. Each row's ``wall_us`` is the
+    batch's kernel time split evenly over its rows."""
+    import pyarrow as pa
+
+    schema = _arrow_schemas()[0]
+    t0 = time.perf_counter()
+    n = rb.num_rows
+    urls = rb.column("url")
+    ts = rb.column("warc_ts")
+    langs = rb.column("lang")
+    lang_list = langs.to_pylist()
+    texts: list = []
+    spans_col: list = []
+    kinds: list = []
+    errors: list = []
+    md5s: list = []
+    nbytes: list = []
+    for html, lang in zip(rb.column("html").to_pylist(), lang_list):
+        if html is None:
+            texts.append(None)
+            spans_col.append(None)
+            kinds.append("error")
+            errors.append("null html payload")
+            md5s.append(None)
+            nbytes.append(0)
+            continue
+        if isinstance(html, str):
+            # schema-violating caller (string column where the
+            # contract is binary): coerce instead of aborting the
+            # job — row-level fault isolation extends to this
+            html = html.encode("utf-8", errors="replace")
+        nbytes.append(len(html))
+        md5s.append(hashlib.md5(html).hexdigest())
+        try:
+            text, spans, kind = extract_document(html, lang)
+            texts.append(text)
+            spans_col.append(
+                [{"start": int(s), "end": int(e), "kind": k} for s, e, k in spans]
+            )
+            kinds.append(kind)
+            errors.append(None)
+        except Exception as exc:  # row-level fault isolation
+            texts.append(None)
+            spans_col.append(None)
+            kinds.append("error")
+            errors.append(f"{type(exc).__name__}: {exc}")
+    per_row = int((time.perf_counter() - t0) * 1e6) // max(n, 1)
+    return pa.RecordBatch.from_arrays(
+        [
+            urls.cast(schema.field("url").type),
+            ts.cast(schema.field("warc_ts").type),
+            pa.array(lang_list, type=pa.string()),
+            pa.array(kinds, type=pa.string()),
+            pa.array(texts, type=pa.string()),
+            pa.array(spans_col, type=schema.field("spans").type),
+            pa.array(errors, type=pa.string()),
+            pa.array(md5s, type=pa.string()),
+            pa.array(nbytes, type=pa.int64()),
+            pa.array([pid] * n, type=pa.int32()),
+            pa.array([per_row] * n, type=pa.int64()),
+        ],
+        schema=schema,
+    )
+
+
+def _extract_batches(batches):
     """mapInArrow kernel: consumes pyarrow RecordBatches directly —
     avoids the pandas conversion of the heavy ``html`` binary column
     (measured: pandas round-trip of a 300MB batch stream costs 2-4x the
-    zero-copy Arrow path).
-
-    With ``lineage``, adds one record for the task's partition once its
-    input is exhausted: rows, error rows, html bytes and the sum of the
-    rows' ``wall_us``. A task that saw no rows adds nothing."""
-    import pyarrow as pa
-
+    zero-copy Arrow path)."""
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
-    schema = _arrow_out_schema()
-    rows = n_errors = n_bytes = wall_us = 0
     for rb in batches:
-        t0 = time.perf_counter()
-        n = rb.num_rows
-        urls = rb.column(rb.schema.get_field_index("url"))
-        ts = rb.column(rb.schema.get_field_index("warc_ts"))
-        htmls = rb.column(rb.schema.get_field_index("html"))
-        langs = rb.column(rb.schema.get_field_index("lang"))
-        lang_list = langs.to_pylist()
-        texts: list = []
-        spans_col: list = []
-        kinds: list = []
-        errors: list = []
-        md5s: list = []
-        nbytes: list = []
-        for html, lang in zip(htmls.to_pylist(), lang_list):
-            if html is None:
-                texts.append(None)
-                spans_col.append(None)
-                kinds.append("error")
-                errors.append("null html payload")
-                md5s.append(None)
-                nbytes.append(0)
+        yield _extract_batch(rb, pid)
+
+
+def _valid(out):
+    """Per-row validity of an EXTRACTED_SCHEMA batch, the rule of
+    ``schemaproc.with_validity(EXTRACTED_SCHEMA)`` and-ed with no kernel
+    error and non-empty text: every required field is non-null,
+    ``error`` is null, and ``text`` is non-null and not empty."""
+    import pyarrow.compute as pc
+
+    ok = pc.and_(
+        pc.is_null(out.column("error")),
+        pc.fill_null(pc.not_equal(out.column("text"), ""), False),
+    )
+    for name in _REQUIRED:
+        ok = pc.and_(ok, pc.is_valid(out.column(name)))
+    return ok
+
+
+def _in_progress(path: str) -> str:
+    head, tail = os.path.split(path)
+    return os.path.join(head, "." + tail)
+
+
+def _write_results(batches, sink: ResultsSink):
+    """mapInArrow function of a results-writing :func:`extract_pages`.
+    Extracts each input batch, adds ``valid``, ``config_hash`` and
+    ``run_id``, and writes it to this task's parquet file under
+    ``sink.path``: ``part-<partition>-<taskAttemptId>.parquet``, or one
+    such file per bucket under ``url_bucket=<b>/`` with
+    ``sink.buckets``. Then yields the partition's WRITTEN_SCHEMA row. A
+    task that sees no rows writes and yields nothing.
+
+    A file is written under its name with a leading dot, which readers
+    skip, and renamed once closed. A failed attempt leaves that file
+    behind; the driver keeps only the files the summary rows name.
+
+    Each Arrow batch is written as one zstd row group (zstd is the
+    session's parquet codec). Batches hold at most ``maxRecordsPerBatch``
+    rows (256, session.py), so a task holds one batch plus one encoded
+    row group per open file, whatever its partition's size."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ctx = TaskContext.get()
+    pid = ctx.partitionId()
+    name = f"part-{pid:05d}-{ctx.taskAttemptId()}.parquet"
+    file_schema, summary_schema = _arrow_schemas()[1:]
+    writers: dict[str, pq.ParquetWriter] = {}  # file, relative to sink.path
+
+    def write(rel: str, batch) -> None:
+        if rel not in writers:
+            path = os.path.join(sink.path, rel)
+            if os.path.dirname(rel):
+                # mkdir, not makedirs: a straggling attempt must not
+                # recreate a staged directory its run has removed
+                try:
+                    os.mkdir(os.path.dirname(path))
+                except FileExistsError:
+                    pass
+            writers[rel] = pq.ParquetWriter(_in_progress(path), file_schema, compression="zstd")
+        writers[rel].write_batch(batch)
+
+    rows = errors = html_bytes = wall_us = 0
+    try:
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
                 continue
-            if isinstance(html, str):
-                # schema-violating caller (string column where the
-                # contract is binary): coerce instead of aborting the
-                # job — row-level fault isolation extends to this
-                html = html.encode("utf-8", errors="replace")
-            nbytes.append(len(html))
-            md5s.append(hashlib.md5(html).hexdigest())
-            try:
-                text, spans, kind = extract_document(html, lang)
-                texts.append(text)
-                spans_col.append(
-                    [
-                        {"start": int(s), "end": int(e), "kind": k}
-                        for s, e, k in spans
-                    ]
-                )
-                kinds.append(kind)
-                errors.append(None)
-            except Exception as exc:  # row-level fault isolation
-                texts.append(None)
-                spans_col.append(None)
-                kinds.append("error")
-                errors.append(f"{type(exc).__name__}: {exc}")
-        per_row = int((time.perf_counter() - t0) * 1e6) // max(n, 1)
-        rows += n
-        n_errors += n - errors.count(None)
-        n_bytes += sum(nbytes)
-        wall_us += per_row * n
-        yield pa.RecordBatch.from_arrays(
-            [
-                urls.cast(schema.field("url").type),
-                ts.cast(schema.field("warc_ts").type),
-                pa.array(lang_list, type=pa.string()),
-                pa.array(kinds, type=pa.string()),
-                pa.array(texts, type=pa.string()),
-                pa.array(spans_col, type=schema.field("spans").type),
-                pa.array(errors, type=pa.string()),
-                pa.array(md5s, type=pa.string()),
-                pa.array(nbytes, type=pa.int64()),
-                pa.array([pid] * n, type=pa.int32()),
-                pa.array([per_row] * n, type=pa.int64()),
-            ],
-            schema=schema,
-        )
-    if lineage is not None and rows:
-        lineage += {pid: (rows, n_errors, n_bytes, wall_us)}
+            out = _extract_batch(rb, pid)
+            res = pa.RecordBatch.from_arrays(
+                out.columns
+                + [
+                    _valid(out),
+                    pa.array([sink.config_hash] * n, pa.string()),
+                    pa.array([sink.run_id] * n, pa.string()),
+                ],
+                schema=file_schema,
+            )
+            if sink.buckets:
+                bucket = rb.column("url_bucket")
+                for b in pc.unique(bucket).to_pylist():
+                    write(f"url_bucket={b}/{name}", res.filter(pc.equal(bucket, b)))
+            else:
+                write(name, res)
+            rows += n
+            errors += n - out.column("error").null_count
+            html_bytes += pc.sum(out.column("n_html_bytes")).as_py()
+            wall_us += pc.sum(out.column("wall_us")).as_py()
+    finally:
+        for w in writers.values():
+            w.close()
+    if not rows:
+        return
+    for rel in writers:
+        path = os.path.join(sink.path, rel)
+        os.rename(_in_progress(path), path)
+    yield pa.RecordBatch.from_pylist(
+        [
+            {
+                "partition_id": pid,
+                "rows": rows,
+                "errors": errors,
+                "html_bytes": html_bytes,
+                "wall_us": wall_us,
+                "files": list(writers),
+            }
+        ],
+        schema=summary_schema,
+    )
 
 
 def extract_pages(
     pages: DataFrame,
     num_partitions: int | None = None,
     salt: bool = True,
-    lineage: Accumulator | None = None,
+    sink: ResultsSink | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → EXTRACTED_SCHEMA rows.
 
-    One Arrow-batched Python hop; everything before and after stays
-    JVM-side. Column pruning: only the four needed columns cross into
-    Python (html is the heavy one and is consumed here).
+    One Arrow-batched Python hop; everything before it stays JVM-side.
+    Column pruning: only the four needed columns cross into Python
+    (html is the heavy one and is consumed here).
 
     Skew handling (north rule): ``salt=True`` repartitions on
     ``xxhash64(url)`` before the UDF — required whenever the upstream
@@ -260,41 +414,41 @@ def extract_pages(
     correctness of load balance beats the one-pass saving unless the
     scan is known-balanced.
 
-    ``lineage`` (a :func:`lineage_accumulator`) collects one record per
-    non-empty partition from the job that runs the extraction. A record
-    is added each time a task's update is applied, so the caller must
-    know how often that happens in the stage that runs the extraction
-    (see :func:`plans.pipeline.run_extraction`).
+    With a ``sink`` the tasks write the results rows themselves
+    (:func:`_write_results`) and the frame holds one WRITTEN_SCHEMA row
+    per non-empty partition instead: nothing but those rows comes back
+    from Python. With ``sink.buckets`` the hop also takes the url's
+    :func:`url_bucket`, computed JVM-side, as an input column.
     """
     cols = pages.select("url", "warc_ts", "html", "lang")
+    if sink is not None and sink.buckets:
+        cols = cols.withColumn("url_bucket", url_bucket(F.col("url"), sink.buckets))
     if salt:
         cols = salt_by_url(cols, num_partitions)
-    fn = _extract_batches
-    if lineage is not None:
-        fn = functools.partial(_extract_batches, lineage=lineage)
-    return cols.mapInArrow(fn, EXTRACTED_SCHEMA)
+    if sink is None:
+        return cols.mapInArrow(_extract_batches, EXTRACTED_SCHEMA)
+    return cols.mapInArrow(functools.partial(_write_results, sink=sink), WRITTEN_SCHEMA)
 
 
-def lineage_from_extracted(records: dict, run_id: str):
+def lineage_from_extracted(records, run_id: str):
     """One lineage row per partition (north rule: partition id, input
-    count, error count, bytes, wall time) from a
-    :func:`lineage_accumulator`'s records, as a pyarrow table typed by
-    ``LINEAGE_SCHEMA``."""
+    count, error count, bytes, wall time) from the WRITTEN_SCHEMA rows
+    of a results-writing :func:`extract_pages`, as a pyarrow table
+    typed by ``LINEAGE_SCHEMA``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     now = datetime.now(timezone.utc).isoformat()
-    pids = sorted(records)
-    rows, errors, nbytes, wall_us = zip(*map(records.get, pids)) if pids else ((),) * 4
+    recs = sorted(records, key=lambda r: r["partition_id"])
     return pa.Table.from_pydict(
         {
-            "run_id": [run_id] * len(pids),
-            "partition_id": pids,
-            "input_count": rows,
-            "error_count": errors,
-            "bytes": nbytes,
-            "wall_ms": [w / 1000.0 for w in wall_us],
-            "date": [now] * len(pids),
+            "run_id": [run_id] * len(recs),
+            "partition_id": [r["partition_id"] for r in recs],
+            "input_count": [r["rows"] for r in recs],
+            "error_count": [r["errors"] for r in recs],
+            "bytes": [r["html_bytes"] for r in recs],
+            "wall_ms": [r["wall_us"] / 1000.0 for r in recs],
+            "date": [now] * len(recs),
         },
         schema=to_arrow_schema(LINEAGE_SCHEMA),
     )

@@ -5,30 +5,34 @@ re-expressed as one DataFrame job per SURVEY.md §3.2's mapping):
     pages → observe(input count)
           → left_anti(newest prior result) # O2 incremental / exact resume
           → repartition(xxhash64(url))     # skew salting (north rule)
-          → mapInArrow(extract)            # Arrow-batched front-end,
-                                           #   lineage records per task
-          → validate → observe(rows, errors)
-          → results staged                 # the one job that extracts
+          → mapInArrow(extract, validate,  # Arrow-batched front-end; each
+                       write results file) #   task writes its own file
+          → collect(one row per partition) # the one job that extracts
+          → stage the reported files       # by the driver, no Spark job
           → lineage, runs staged           # by the driver, no Spark job
           → rename lineage, runs, results  # results last: the commit
 
-Job plan of a run: the results write runs the anti-join, extraction and
-validation, fills both Observations and collects the lineage records in
-the same job, so the run's counts and lineage cost no job. The anti-join
-reads the results table with its schema (no footer job), pruned to url,
-input_md5 and config_hash. The driver writes the lineage rows and the
-runs row with pyarrow. On a fresh store the only Spark jobs are the
-results write's salt exchange and write; the results rename is the
-run's commit point.
+Job plan of a run: the ``collect()`` of the extraction's summary rows
+runs the anti-join and the extraction; each extraction task validates
+its rows and writes them to a parquet file of its own with pyarrow,
+then returns one row with its partition's counts and file names. Those
+rows are the run's lineage and counts, so neither costs a job, and no
+extracted row crosses back into the JVM. The anti-join reads the
+results table with its schema (no footer job), pruned to url,
+input_md5 and config_hash. The driver stages exactly the files the
+rows name and writes the lineage rows and the runs row with pyarrow.
+On a fresh store the only Spark jobs are the salt exchange and the
+collect; the results rename is the run's commit point.
 
 Whole-run memoization (O1, ``base.py:157-162``): if nothing is left
-after the anti-join, the results write produces no rows, nothing is
-committed to any table, and the run returns early. Exact resume: resume
-and ``read_results`` read only the results table, whose rename commits
-the run after its lineage and runs rows. A run killed before that
-rename is invisible to both and is redone in full by the next run; a
-multi-snapshot history replays only missing urls. Results rows carry
-their ``run_id``; the run's date is in its ``runs`` row.
+after the anti-join, no task writes a row, nothing is committed to any
+table, and the run returns early. Exact resume: resume and
+``read_results`` read only the results table, whose rename commits the
+run after its lineage and runs rows. A run killed before that rename is
+invisible to both and is redone in full by the next run; a
+multi-snapshot history replays only missing urls. A run that fails
+removes what it staged under ``.tmp``. Results rows carry their
+``run_id``; the run's date is in its ``runs`` row.
 
 ``post_process="only"`` mode (``base.py:172-215``): replay a transform
 over the persisted results table without re-extraction — see
@@ -38,6 +42,7 @@ over the persisted results table without re-extraction — see
 from __future__ import annotations
 
 import json
+import shutil
 import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -46,9 +51,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.extract import extract_pages, lineage_accumulator, lineage_from_extracted
+from ..operators.extract import ResultsSink, extract_pages, lineage_from_extracted, url_bucket
 from ..operators.incremental import config_hash, unprocessed
-from ..operators.schemaproc import with_validity
 from ..schemas import EXTRACTED_SCHEMA, RESULTS_SCHEMA, RUNS_SCHEMA
 from ..sources.catalog import Catalog
 
@@ -114,102 +118,78 @@ def run_extraction(
     run_id = uuid.uuid4().hex[:12]
     now = datetime.now(timezone.utc).isoformat()
 
-    # Observations are filled by the first job over the observed frame:
-    # the results write below. Attach them after any earlier action on
-    # ``pages`` (the corpus digest above).
-    inputs, outputs = Observation(), Observation()
+    # The Observation is filled by the first job over the observed frame:
+    # the extraction's collect below. Attach it after any earlier action
+    # on ``pages`` (the corpus digest above).
+    inputs = Observation()
     pages = pages.observe(inputs, F.count(F.lit(1)).alias("n"))
     # resume state: the results table, pruned to the resume key
     key = T.StructType([RESULTS_SCHEMA[c] for c in ("url", "input_md5", "config_hash")])
     prior = cat.read(spark, "results", schema=key) if resume else None
     todo = unprocessed(pages, prior, cfg)
 
-    # ``salt`` is an execution detail (same rows either way), so it is
-    # deliberately NOT part of the config hash — toggling it must not
-    # invalidate the cache.
-    #
-    # Each extraction task adds its partition's lineage record to
-    # ``lineage``. Without ``partition_buckets`` the extraction runs in
-    # the results write's result stage, where Spark applies a successful
-    # task's update exactly once. With ``partition_buckets`` it runs in
-    # the bucket exchange's shuffle-map stage, where a re-run stage can
-    # send a task's update again; records are keyed by partition id, so
-    # the re-sent record replaces the first and adds no second one.
-    lineage = lineage_accumulator(spark)
-    ext = extract_pages(todo, num_partitions=num_partitions, salt=salt, lineage=lineage)
-    # per-row validity = no kernel error AND non-empty text AND schema
-    # conformance (required-marked fields non-null — the generic
-    # StructType-walk validator, ≙ the reference's per-study pydantic
-    # validation at base.py:1072-1095; failures flag, never abort).
-    # Rows carry their run's identity, so per-config results survive
-    # compaction and can be selected on read.
-    validated = with_validity(ext, EXTRACTED_SCHEMA, out_col="_schema_ok").select(
-        *EXTRACTED_SCHEMA.names,
-        (
-            F.col("error").isNull()
-            & F.col("_schema_ok")
-            & F.col("text").isNotNull()
-            & (F.length("text") > 0)
-        ).alias("valid"),
-        F.lit(cfg).alias("config_hash"),
-        F.lit(run_id).alias("run_id"),
-    )
-    partition_by = None
-    if partition_buckets:
-        # repartition ON the bucket before the partitioned write: each
-        # write task then owns whole buckets, so the snapshot holds
-        # O(buckets) files instead of O(extract_tasks × buckets) — the
-        # small-files failure mode of naive partitionBy at scale. Costs
-        # one shuffle of the output rows (not the html payload — that
-        # was consumed by the extract kernel).
-        validated = validated.withColumn(
-            "url_bucket",
-            F.pmod(F.xxhash64(F.col("url")), F.lit(partition_buckets)).cast("int"),
-        ).repartition(partition_buckets, F.col("url_bucket"))
-        partition_by = ["url_bucket"]
-    # observe the frame the writer consumes: an observation below the
-    # bucket exchange is lost when AQE replaces an empty exchange's
-    # consumer with an empty relation
-    validated = validated.observe(
-        outputs, F.count(F.lit(1)).alias("n"), F.count("error").alias("errors")
-    )
+    partition_by = ["url_bucket"] if partition_buckets else None
+    written = cat.stage_dir("results", partition_by)
+    staged = [written]  # removed at the end: committed ones are gone by then
     try:
-        staged = cat.stage(
-            validated, "results", partition_by=partition_by, row_count=lambda: outputs.get["n"]
+        # ``salt`` is an execution detail (same rows either way), so it
+        # is deliberately NOT part of the config hash — toggling it must
+        # not invalidate the cache.
+        #
+        # Each extraction task writes its rows under ``written`` and
+        # returns one row naming its files; the results rows carry their
+        # validity (``operators.extract._valid``: the required fields of
+        # EXTRACTED_SCHEMA non-null, no kernel error, non-empty text ≙ the
+        # reference's per-study validation at base.py:1072-1095; failures
+        # flag, never abort) and their run's identity, so per-config
+        # results survive compaction and can be selected on read.
+        #
+        # With ``partition_buckets`` each task writes one file per bucket
+        # it holds, so a snapshot has at most tasks × N files. Compaction
+        # already writes shuffle partitions × N, and auto-compaction still
+        # bounds the snapshot history.
+        sink = ResultsSink(written, cfg, run_id, partition_buckets)
+        # This collect is the one job that extracts. The extraction runs
+        # in its result stage, and Spark takes one successful attempt's
+        # result per partition of a result stage and drops any other
+        # attempt's, so each partition's row arrives exactly once. A
+        # file no row names is a failed or superseded attempt's.
+        parts = extract_pages(todo, num_partitions=num_partitions, salt=salt, sink=sink).collect()
+        n_input = inputs.get["n"]
+        n_rows = sum(r["rows"] for r in parts)
+        if n_rows == 0:
+            # O1 whole-run memoization: the anti-join left nothing to do
+            return RunResult(run_id, cfg, n_input, 0, 0, True)
+        results = cat.stage_files(written, [f for r in parts for f in r["files"]])
+        staged.append(results)
+        lineage = cat.stage_arrow(lineage_from_extracted(parts, run_id), "lineage")
+        staged.append(lineage)
+        run_row = {
+            "run_id": run_id,
+            "extractor": EXTRACTOR_NAME,
+            "version": EXTRACTOR_VERSION,
+            "config_hash": cfg,
+            "kwargs_json": json.dumps(kwargs or {}, sort_keys=True),
+            "schema_json": EXTRACTED_SCHEMA.json(),
+            "date": now,
+        }
+        runs = cat.stage_arrow(
+            pa.Table.from_pylist([run_row], schema=to_arrow_schema(RUNS_SCHEMA)), "runs"
         )
+        staged.append(runs)
+        # The results rename is the run's commit point. Resume and
+        # read_results read only results, so they never see a run killed
+        # before it. A lineage or runs reader may: a run killed between
+        # the renames leaves lineage (and runs) rows whose run_id has no
+        # results rows; join on results' run_id to skip them.
+        cat.commit(lineage, "lineage")
+        cat.commit(runs, "runs")
+        cat.commit(results, "results", partition_by=partition_by)
     finally:
-        # The driver's accumulator registry never frees an accumulator,
-        # and a stream calls this once per micro-batch: drop the records.
-        # They are one 4-tuple per non-empty extraction partition, about
-        # 0.25 KB each (CPython, measured), so 10^6 partitions hold about
-        # 250 MB on the driver.
-        records, lineage.value = lineage.value, {}
-    n_input = inputs.get["n"]
-    if staged is None:
-        # O1 whole-run memoization: the anti-join left nothing to do
-        return RunResult(run_id, cfg, n_input, 0, 0, True)
-
-    run_row = {
-        "run_id": run_id,
-        "extractor": EXTRACTOR_NAME,
-        "version": EXTRACTOR_VERSION,
-        "config_hash": cfg,
-        "kwargs_json": json.dumps(kwargs or {}, sort_keys=True),
-        "schema_json": EXTRACTED_SCHEMA.json(),
-        "date": now,
-    }
-    staged_lineage = cat.stage_arrow(lineage_from_extracted(records, run_id), "lineage")
-    staged_runs = cat.stage_arrow(
-        pa.Table.from_pylist([run_row], schema=to_arrow_schema(RUNS_SCHEMA)), "runs"
-    )
-    # The results rename is the run's commit point. Resume and
-    # read_results read only results, so they never see a run killed
-    # before it. A lineage or runs reader may: a run killed between the
-    # renames leaves lineage (and runs) rows whose run_id has no results
-    # rows; join on results' run_id to skip them.
-    cat.commit(staged_lineage, "lineage")
-    cat.commit(staged_runs, "runs")
-    cat.commit(staged, "results", partition_by=partition_by)
+        # whatever this run staged and did not commit, including the
+        # files of failed task attempts, leaves .tmp with it
+        for d in staged:
+            shutil.rmtree(d, ignore_errors=True)
     if auto_compact_after is not None:
         # results keyed by (url, config_hash): latest row per url per
         # config survives, so compaction never drops another config's
@@ -220,14 +200,13 @@ def run_extraction(
             "results",
             ["url", "config_hash"],
             max_snapshots=auto_compact_after,
-            partition_by=["url_bucket"] if partition_buckets else None,
+            partition_by=partition_by,
         )
         cat.maybe_compact(
             spark, "lineage", ["run_id", "partition_id"], max_snapshots=auto_compact_after
         )
         cat.maybe_compact(spark, "runs", ["run_id"], max_snapshots=auto_compact_after)
-    counts = outputs.get
-    return RunResult(run_id, cfg, n_input, counts["n"], counts["errors"], False)
+    return RunResult(run_id, cfg, n_input, n_rows, sum(r["errors"] for r in parts), False)
 
 
 def read_results(
@@ -268,8 +247,7 @@ def read_results_for_url(
     df = read_results(spark, store_root, config_hash=config_hash)
     return df.where(
         (
-            F.col("url_bucket")
-            == F.pmod(F.xxhash64(F.lit(url)), F.lit(partition_buckets)).cast("int")
+            F.col("url_bucket") == url_bucket(F.lit(url), partition_buckets)
         )
         & (F.col("url") == url)
     )

@@ -35,13 +35,18 @@ SPAN_TYPE = T.ArrayType(
 # Output of the extraction stage (mapInArrow) — one row per page.
 # partition_id / wall_us / n_html_bytes are the per-row side of the
 # per-partition lineage rows (north rule), which the extraction tasks
-# total as they write these rows. "required"
-# metadata drives the generic schema-conformance validity flag
+# total as they write these rows to the results files. "required"
+# metadata drives the schema-conformance validity flag
 # (operators/schemaproc.with_validity ≙ the reference's per-row
-# pydantic validation, base.py:1072-1095).
+# pydantic validation, base.py:1072-1095); the results-writing tasks
+# derive the same rule from it (operators/extract._valid), so only
+# top-level fields may be marked. Required fields stay nullable: a
+# page with a null url is a bad page that yields an invalid row, and a
+# non-null declaration would let Spark fold the null check away (or
+# fail the job converting the row).
 EXTRACTED_SCHEMA = T.StructType(
     [
-        T.StructField("url", T.StringType(), False, metadata={"required": True}),
+        T.StructField("url", T.StringType(), True, metadata={"required": True}),
         T.StructField("warc_ts", T.TimestampType(), True),
         T.StructField("lang", T.StringType(), True),
         # html | jats | pdf | error

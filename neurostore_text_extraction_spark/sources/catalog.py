@@ -6,22 +6,29 @@ is a config swap).
 Write protocol: each append stages its rows under ``<root>/.tmp/<uuid>``
 then commits them by ``os.rename`` to ``<root>/<table>/snap-<n>-<uuid>``
 — rename is atomic on one filesystem, so readers never observe a
-partial snapshot (the analogue of Iceberg's snapshot commit). A
-snapshot only becomes visible when Spark's own job-level commit
-(_SUCCESS) has completed. A writer that commits to several tables
+partial snapshot (the analogue of Iceberg's snapshot commit). Rows are
+staged three ways: by a Spark write (:meth:`Catalog.stage`, visible
+only once Spark's job-level commit has completed), by a pyarrow write
+in the calling process (:meth:`Catalog.stage_arrow`), or by tasks that
+write their own files into a :meth:`Catalog.stage_dir` and report them,
+after which the driver stages exactly the reported files
+(:meth:`Catalog.stage_files`; Iceberg's tasks-write, driver-commits
+pattern). Task-written files need a store root that every executor
+reaches as a filesystem path. A writer that commits to several tables
 stages all of them first and then renames them in the order it needs
 (:func:`plans.pipeline.run_extraction` renames results last).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
 from collections.abc import Callable
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:
@@ -167,7 +174,11 @@ class Catalog:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        try:
+            writer.parquet(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         if row_count is not None and row_count() == 0:
             shutil.rmtree(tmp, ignore_errors=True)
             return None
@@ -178,10 +189,32 @@ class Catalog:
         process, unpartitioned and without a Spark job."""
         import pyarrow.parquet as pq
 
-        self._check_partition_spec(table, None)
+        tmp = self.stage_dir(table)
+        pq.write_table(data, os.path.join(tmp, "part-00000.parquet"))
+        return tmp
+
+    def stage_dir(self, table: str, partition_by: list[str] | None = None) -> str:
+        """A new empty directory under ``.tmp`` that writers fill with
+        their own files for ``table``; :meth:`stage_files` then stages
+        the ones to commit. The layout is checked first, as in
+        :meth:`stage`."""
+        self._check_partition_spec(table, partition_by)
         tmp = self._tmp_path()
         os.makedirs(tmp)
-        pq.write_table(data, os.path.join(tmp, "part-00000.parquet"))
+        return tmp
+
+    def stage_files(self, src: str, files: list[str]) -> str:
+        """Stage exactly ``files`` (paths relative to ``src``, at least
+        one) for a later :meth:`commit`: each is renamed into a new
+        directory under ``.tmp``, which is returned. Anything else in
+        ``src``, such as a failed task attempt's file, stays there for
+        the caller to remove, and a file a straggling attempt renames
+        into ``src`` later cannot reach the snapshot."""
+        tmp = self._tmp_path()
+        for f in files:
+            dest = os.path.join(tmp, f)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.rename(os.path.join(src, f), dest)
         return tmp
 
     def commit(self, staged: str, table: str, partition_by: list[str] | None = None) -> str:
@@ -228,13 +261,34 @@ class Catalog:
         first-file-schema read. Footer merging costs O(files), bounded
         by auto-compaction. Footer reads are a Spark job; a caller that
         knows the table's ``schema`` passes it, and no footer is read
-        (columns absent from a snapshot read as NULL)."""
+        (columns absent from a snapshot read as NULL).
+
+        A partitioned table is read as a union by name of one read per
+        snapshot, each with its own ``basePath``: partition discovery
+        rejects several hive-partitioned roots in one read
+        (``CONFLICTING_DIRECTORY_STRUCTURES``). A union has no metadata
+        columns, so each of its branches carries its rows' file path in
+        a ``_metadata`` column of its own, and :data:`SNAPSHOT_PATH`
+        resolves on either layout."""
         snaps = self.snapshots(table)
         if not snaps:
             return None
-        if schema is not None:
-            return spark.read.schema(schema).parquet(*snaps)
-        return spark.read.option("mergeSchema", "true").parquet(*snaps)
+
+        def reader():
+            if schema is not None:
+                return spark.read.schema(schema)
+            return spark.read.option("mergeSchema", "true")
+
+        if not self._recorded_spec(table):
+            return reader().parquet(*snaps)
+        parts = [
+            reader()
+            .option("basePath", s)
+            .parquet(s)
+            .withColumn("_metadata", F.struct(F.col(SNAPSHOT_PATH).alias("file_path")))
+            for s in snaps
+        ]
+        return functools.reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
     def read_latest(
         self,
@@ -248,17 +302,18 @@ class Catalog:
         ``order_col`` desc), so readers see identical results before
         and after compaction, including the duplicated-but-correct
         state a crashed compact leaves behind."""
-        from pyspark.sql import Window, functions as F
+        from pyspark.sql import Window
 
-        snaps = self.snapshots(table)
-        if not snaps:
+        df = self.read(spark, table)
+        if df is None:
             return None
-        df = spark.read.option("mergeSchema", "true").parquet(*snaps)
         order = [F.col(SNAPSHOT_PATH).desc()]
         if order_col is not None:
             order.append(F.col(order_col).desc())
         w = Window.partitionBy(*key_cols).orderBy(*order)
-        return df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
+        latest = df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1")
+        # a no-op on an unpartitioned table, where _metadata is hidden
+        return latest.drop("_rn", "_metadata")
 
     def exists(self, table: str) -> bool:
         return bool(self.snapshots(table))
@@ -287,7 +342,7 @@ class Catalog:
         ``_next_seq``), and the next ``compact`` run collapses the
         leftovers; plain ``read`` unions everything and will show the
         duplicates."""
-        from pyspark.sql import Window, functions as F
+        from pyspark.sql import Window
 
         snaps = self.snapshots(table)
         if len(snaps) <= 1:

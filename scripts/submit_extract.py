@@ -12,8 +12,12 @@ clusters").
 The package code resolves from the ``--py-files`` zip (built by
 ``scripts/submit.sh``); no repo checkout is needed on the cluster. The
 session factory is called with ``master=None`` so the submit-provided
-master and executor topology win. Exit code 0 on success; the run's
-result counters are printed as one JSON line for workflow schedulers.
+master and executor topology win. The extraction tasks' Python
+workers write the results files into the store themselves, and the
+driver commits them by rename, so ``--store`` must be a filesystem path
+that the driver and every executor reach (a shared mount). Exit code 0
+on success; the run's result counters are printed as one JSON line for
+workflow schedulers.
 """
 
 from __future__ import annotations

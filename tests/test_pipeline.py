@@ -95,12 +95,16 @@ def test_kill_and_resume_exact(spark, corpus, tmp_path):
     ).filter("text != golden_text").count() == 0
 
 
-# Spark jobs one run_extraction launches on a fresh store: the results
-# write's salt exchange and write. Lineage and runs take no job.
+# Spark jobs one run_extraction launches on a fresh store: the salt
+# exchange and the collect of the extraction tasks' summary rows; the
+# tasks write the results files. Lineage and runs take no job.
 FRESH_RUN_JOBS = 2
 # ... and on a store holding a prior run, with new and changed pages: the
-# results write, whose anti-join against the prior results adds two jobs
+# collect, whose anti-join against the prior results adds two jobs
 RESUME_RUN_JOBS = 4
+# ... and on a fresh store with partition_buckets: the same two jobs, as
+# the tasks write one file per bucket and no bucket exchange runs
+BUCKETED_FRESH_RUN_JOBS = 2
 
 
 def _run_jobs(spark, group, *args, **kwargs):
@@ -115,10 +119,11 @@ def _run_jobs(spark, group, *args, **kwargs):
 
 
 def test_fresh_run_job_budget(spark, corpus, tmp_path):
-    """Run counts come from Observations filled by the results write,
-    and lineage from the same job's tasks, so a bookkeeping job (a
-    probe, a count, a footer read, a lineage pass) that comes back shows
-    up here as a job over the budget."""
+    """The input count comes from an Observation filled by the
+    extraction job, and the other counts and lineage from its tasks'
+    summary rows, so a bookkeeping job (a probe, a count, a footer read,
+    a lineage pass) that comes back shows up here as a job over the
+    budget."""
     # default num_partitions: sizing the salt exchange runs no job
     r, jobs = _run_jobs(spark, f"fresh-{tmp_path.name}", pages_view(corpus), str(tmp_path / "store"))
     assert r.n_processed == N_ROWS
@@ -138,6 +143,16 @@ def test_resume_run_job_budget(spark, corpus, tmp_path):
     r, jobs = _run_jobs(spark, f"resume-{tmp_path.name}", changed, store)
     assert not r.skipped and 0 < r.n_processed < N_ROWS
     assert jobs <= RESUME_RUN_JOBS
+
+
+def test_bucketed_fresh_run_job_budget(spark, corpus, tmp_path):
+    """With partition_buckets the tasks write each bucket's file, so no
+    exchange on the bucket runs after the extraction."""
+    r, jobs = _run_jobs(
+        spark, f"buckets-{tmp_path.name}", pages_view(corpus), str(tmp_path / "store"), partition_buckets=4
+    )
+    assert r.n_processed == N_ROWS
+    assert jobs <= BUCKETED_FRESH_RUN_JOBS
 
 
 def test_default_salt_runs_one_task_per_slot(spark, corpus, tmp_path):
@@ -204,8 +219,7 @@ def test_salt_by_url_count_from_size_estimate(spark):
 @pytest.mark.parametrize("buckets", [None, 4])
 def test_memoized_rerun_commits_nothing(spark, corpus, tmp_path, buckets):
     """A rerun over a finished corpus writes no rows: no table gains a
-    snapshot and the empty write leaves no directory under .tmp (with
-    partition_buckets the empty write also goes through partitionBy)."""
+    snapshot and the run leaves no directory under .tmp."""
     import os
 
     store = str(tmp_path / "store")
@@ -263,9 +277,9 @@ def _lineage_oracle(spark, store, run_id):
 
 @pytest.mark.parametrize("buckets", [None, 4])
 def test_lineage_accounts_for_every_row(spark, corpus, tmp_path, buckets):
-    """Lineage records come from the extraction tasks: without buckets
-    from the results write's result stage, with buckets from a
-    shuffle-map stage. Either way they match the written rows."""
+    """Lineage rows come from the extraction tasks' summary rows; with
+    buckets a task's rows spread over one file per bucket. Either way
+    they match the written rows."""
     store = str(tmp_path / "store4")
     r = run_extraction(
         spark, pages_view(corpus), store, num_partitions=8, partition_buckets=buckets
@@ -290,30 +304,13 @@ def test_lineage_counts_errors_and_keeps_runs_apart(spark, corpus, tmp_path):
     assert Catalog(b).read(spark, "lineage").where(F.col("run_id") != rb.run_id).count() == 0
 
 
-def test_lineage_record_resent_by_a_rerun_task_is_counted_once():
-    """A re-run shuffle-map stage can send a task's update again; the
-    record for its partition replaces the first."""
-    from neurostore_text_extraction_spark.operators.extract import (
-        _LineageParam,
-        lineage_from_extracted,
-    )
-
-    param = _LineageParam()
-    acc = param.zero({})
-    for update in ({0: (3, 1, 30, 300)}, {1: (2, 0, 20, 200)}, {0: (3, 1, 30, 300)}):
-        acc = param.addInPlace(acc, update)
-    lin = lineage_from_extracted(acc, "r").to_pylist()
-    assert [(r["partition_id"], r["input_count"], r["wall_ms"]) for r in lin] == [
-        (0, 3, 0.3),
-        (1, 2, 0.2),
-    ]
-
-
 def test_run_killed_between_renames_leaves_no_partial_run(spark, corpus, tmp_path, monkeypatch):
     """Three attempts at one run die at their 1st, 2nd and 3rd table
-    rename. After each, every run in results has lineage rows summing
-    to its results rows and one runs row. The rerun is not skipped: it
-    commits all three tables and read_results serves the golden text."""
+    rename, and a fourth in its extraction job. After each, every run in
+    results has lineage rows summing to its results rows and one runs
+    row, and .tmp is empty; the failed extraction changed no table. The
+    rerun is not skipped: it commits all three tables and read_results
+    serves the golden text."""
     import os
 
     from neurostore_text_extraction_spark.sources import catalog
@@ -335,6 +332,7 @@ def test_run_killed_between_renames_leaves_no_partial_run(spark, corpus, tmp_pat
         runs = per_run("runs", F.count(F.lit(1)))
         for run_id, rows in results.items():
             assert lineage.get(run_id) == rows and runs.get(run_id) == 1
+        assert os.listdir(os.path.join(store, ".tmp")) == []
         return results
 
     for crash_at in (1, 2, 3):
@@ -353,11 +351,51 @@ def test_run_killed_between_renames_leaves_no_partial_run(spark, corpus, tmp_pat
         monkeypatch.undo()
         check_complete()
 
+    # one input partition, not salted: the extraction task itself fails
+    cat = Catalog(store)
+    before = {t: cat.snapshots(t) for t in TABLES}
+    poisoned = pages_view(sub).coalesce(1).withColumn(
+        "url",
+        F.when(F.xxhash64("url") % 3 == 0, F.raise_error(F.lit("poisoned url"))).otherwise(F.col("url")),
+    )
+    with pytest.raises(Exception, match="poisoned url"):
+        run_extraction(spark, poisoned, store, salt=False)
+    assert {t: cat.snapshots(t) for t in TABLES} == before
+    check_complete()
+
     r = run_extraction(spark, pages_view(sub), store, num_partitions=2)
     assert not r.skipped and r.n_processed == n
     assert check_complete()[r.run_id] == n
     got = read_results(spark, store).join(sub.select("url", "golden_text"), "url")
     assert got.count() == n and got.where("text != golden_text").count() == 0
+
+
+def test_commit_keeps_only_the_reported_files(spark, corpus, tmp_path, monkeypatch):
+    """A file in the tasks' staged directory that no summary row names,
+    such as a failed attempt's, is not committed."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stray = "part-00000-999999.parquet"
+    real_stage_dir = Catalog.stage_dir
+
+    def stage_dir(self, table, partition_by=None):
+        d = real_stage_dir(self, table, partition_by)
+        if table == "results":
+            pq.write_table(pa.table({"url": ["stray"]}), os.path.join(d, stray))
+        return d
+
+    monkeypatch.setattr(Catalog, "stage_dir", stage_dir)
+    store = str(tmp_path / "store")
+    sub = corpus.where(F.xxhash64("url") % 4 == 0)
+    r = run_extraction(spark, pages_view(sub), store, num_partitions=2)
+    (snap,) = Catalog(store).snapshots("results")
+    assert stray not in os.listdir(snap)
+    assert read_results(spark, store).where(F.col("url") == "stray").count() == 0
+    assert read_results(spark, store).count() == r.n_processed == sub.count()
+    assert os.listdir(os.path.join(store, ".tmp")) == []
 
 
 def test_replay_postprocess_only(spark, corpus, tmp_path):
@@ -380,6 +418,56 @@ def _pages(spark, *url_html):
         [(url, None, html, None, None) for url, html in url_html],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
+
+
+def test_task_validity_matches_the_jvm_rule(spark, tmp_path):
+    """The extraction tasks flag each results row's validity; on every
+    row the flag equals the JVM rule over extract_pages' output:
+    with_validity(EXTRACTED_SCHEMA) and no error and non-empty text. A
+    null-url page, a null payload and an empty page are invalid."""
+    from neurostore_text_extraction_spark.operators.schemaproc import with_validity
+    from neurostore_text_extraction_spark.schemas import EXTRACTED_SCHEMA
+
+    pages = _pages(
+        spark,
+        ("u1", None),
+        ("u2", GOOD_HTML),
+        ("u3", b"<html><body></body></html>"),
+        (None, GOOD_HTML),
+        ("u5", b"<div>" * 5000 + b"x"),
+    )
+    store = str(tmp_path / "store")
+    run_extraction(spark, pages, store, num_partitions=2)
+    got = Catalog(store).read(spark, "results").select("url", "input_md5", "valid")
+    oracle = with_validity(
+        extract_pages(pages, num_partitions=2), EXTRACTED_SCHEMA, out_col="_schema_ok"
+    ).select(
+        "url",
+        "input_md5",
+        (
+            F.col("error").isNull()
+            & F.col("_schema_ok")
+            & F.col("text").isNotNull()
+            & (F.length("text") > 0)
+        ).alias("valid"),
+    )
+    want = {(r.url, r.input_md5): r.valid for r in oracle.collect()}
+    assert {(r.url, r.input_md5): r.valid for r in got.collect()} == want
+    assert [url for (url, _), ok in want.items() if ok] == ["u2"] and len(want) == 5
+
+
+def test_nested_required_mark_is_rejected():
+    """The task-side validity rule checks top-level fields only, so a
+    schema that marks a nested field required is refused."""
+    from pyspark.sql import types as T
+
+    from neurostore_text_extraction_spark.operators.extract import _required_fields
+
+    inner = T.StructType([T.StructField("x", T.StringType(), True, metadata={"required": True})])
+    top = T.StructField("a", T.StringType(), True, metadata={"required": True})
+    assert _required_fields(T.StructType([top, T.StructField("b", T.StringType())])) == ("a",)
+    with pytest.raises(ValueError, match="nested"):
+        _required_fields(T.StructType([top, T.StructField("b", T.ArrayType(inner))]))
 
 
 def test_error_isolation_in_pipeline(spark, tmp_path):
@@ -520,6 +608,8 @@ def test_read_latest_dedupes_crashed_compact_state(spark, tmp_path):
 def test_auto_compaction_bounds_snapshot_history(spark, corpus, tmp_path):
     """Long-lived incremental pipeline: snapshot history stays bounded
     by auto_compact_after, and memoization still holds afterwards."""
+    import os
+
     store = str(tmp_path / "store")
     pages = pages_view(corpus).limit(30).cache()
     pages.count()
@@ -546,6 +636,14 @@ def test_auto_compaction_bounds_snapshot_history(spark, corpus, tmp_path):
     assert run_extraction(spark, last, store, num_partitions=4).skipped
     # and read_results still returns one latest row per url
     assert read_results(spark, store).groupBy("url").count().where("count > 1").count() == 0
+    # the store mixes a compaction's Spark-written snapshot with the
+    # extraction tasks' pyarrow-written ones; they read back as one table
+    spark_written = [os.path.exists(os.path.join(s, "_SUCCESS")) for s in cat.snapshots("results")]
+    assert any(spark_written) and not all(spark_written)
+    res = read_results(spark, store)
+    assert res.schema.simpleString() == RESULTS_SCHEMA.simpleString()
+    got = res.join(corpus.select("url", "golden_text"), "url")
+    assert got.count() == 30 and got.where("text != golden_text").count() == 0
     pages.unpersist()
 
 
@@ -673,6 +771,30 @@ def test_partitioned_results_write_and_bucket_pruned_lookup(spark, tmp_path):
     assert len(snaps) == 1
     assert any(d.startswith("url_bucket=") for d in os.listdir(snaps[0]))
     assert read_results(spark, store).count() == 30
+
+
+def test_bucketed_store_reads_after_a_second_run(spark, tmp_path):
+    """A bucketed results table with two snapshots reads back: Spark's
+    partition discovery rejects several hive-partitioned snapshot roots
+    in one read, so each snapshot is read on its own. A third run, whose
+    resume reads both, is a whole-run cache hit."""
+    from neurostore_text_extraction_spark.plans.pipeline import read_results_for_url
+
+    gen = generate_pages(spark, 200, 8).cache()
+    pages = pages_view(gen)
+    store = str(tmp_path / "store")
+    run_extraction(spark, pages.where(F.xxhash64("url") % 3 != 0), store, partition_buckets=4)
+    assert not run_extraction(spark, pages, store, partition_buckets=4).skipped
+    assert len(Catalog(store).snapshots("results")) == 2
+    golden = gen.select("url", "golden_text")
+    got = read_results(spark, store).join(golden, "url")
+    assert got.count() == 200 and got.where("text != golden_text").count() == 0
+    for first_run in (True, False):
+        row = golden.where((F.xxhash64("url") % 3 != 0) == first_run).orderBy("url").first()
+        hit = read_results_for_url(spark, store, row.url, partition_buckets=4).collect()
+        assert [h.text for h in hit] == [row.golden_text]
+    assert run_extraction(spark, pages, store, partition_buckets=4).skipped
+    gen.unpersist()
 
 
 def test_schema_evolution_add_column(spark, tmp_path):
